@@ -6,6 +6,10 @@ import pytest
 from themis_spark.session import get_spark
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "spark: test drives a live SparkSession")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="themis_tests", master="local[8]", shuffle_partitions=8)

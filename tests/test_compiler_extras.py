@@ -88,3 +88,61 @@ def test_enum_small_sets_stay_literal(spark):
     got = {r["v"]: r["n"] for r in df.select(
         "v", F.size(plan.violations_col()).alias("n")).collect()}
     assert got == {"a": 0, "x": 1}
+
+
+def _max_isin_literals(plan) -> int:
+    """Longest literal list of any ``in(value, lit, ...)`` node in the
+    plan's columns (Spark prints an isin as that call form)."""
+    import re
+
+    text = " ".join(c._jc.toString() for c in
+                    [ch.predicate for ch in plan.checks] + plan.variant_arrays)
+    longest = 0
+    for m in re.finditer(r"\bin\(", text):
+        depth, args, quoted = 1, 1, False
+        for ch in text[m.end():]:
+            if ch == "'":
+                quoted = not quoted
+            elif quoted:
+                continue
+            elif ch == "(":
+                depth += 1
+            elif ch == ")":
+                depth -= 1
+                if depth == 0:
+                    break
+            elif ch == "," and depth == 1:
+                args += 1
+        longest = max(longest, args - 1)
+    return longest
+
+
+def test_no_plan_inlines_an_enum_past_the_literal_limit(spark):
+    """ENUM_LITERAL_MAX bounds every literal isin, element lambdas
+    included: an items / additionalItems / map-value enum past it leaves
+    the native tier (same verdicts) instead of inlining 1500 literals."""
+    from themis_spark.plans.vector_checks import ENUM_LITERAL_MAX
+
+    big = [f"m{i:05d}" for i in range(1500)]
+    small = big[:ENUM_LITERAL_MAX]
+    df = spark.createDataFrame(
+        [(["m00001", "m01499"], ["x", "m00002"], {"k": "m00003"}),
+         (["m00001", "nope"], ["x", "nope"], {"k": "nope"}),
+         (None, None, None)],
+        "tags array<string>, tup array<string>, attrs map<string,string>")
+
+    def schema(members):
+        return {"type": "object", "properties": {
+            "tags": {"type": "array", "items": {"type": "string", "enum": members}},
+            "tup": {"type": "array", "items": [{"type": "string"}],
+                    "additionalItems": {"enum": members}},
+            "attrs": {"type": "object",
+                      "additionalProperties": {"type": "string", "enum": members}},
+        }}
+
+    assert _max_isin_literals(compile_plan(schema(small), df.schema)) == ENUM_LITERAL_MAX
+    plan = compile_plan(schema(big), df.schema)
+    assert _max_isin_literals(plan) <= ENUM_LITERAL_MAX
+    got = [sorted(r["v"]) for r in df.select(F.transform(
+        plan.violations_col(), lambda v: v["keyword"]).alias("v")).collect()]
+    assert got == [[], ["enum", "enum", "enum"], []]

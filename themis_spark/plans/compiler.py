@@ -394,6 +394,11 @@ def _scalar_pred_builders(
         if any(isinstance(m, (list, dict)) for m in members):
             raise _NotNative("non-scalar enum members need deep equality")
         scalars = _enum_members_for(members, dt)
+        if len(scalars) > vector_checks.ENUM_LITERAL_MAX:
+            # same bound as the column-level enum: a longer literal isin
+            # costs seconds of driver-side planning per query, and an
+            # element lambda has no broadcast-hash-set form
+            raise _NotNative(f"enum of {len(scalars)} literals in an element schema")
         has_null = any(m is None for m in members)
 
         # draft-4: null matches enum only via an explicit null member;

@@ -97,6 +97,29 @@ def _translate_z_anchor(pattern: str) -> str:
     return "".join(out)
 
 
+def _has_dollar_anchor(pattern: str) -> bool:
+    """True when ``pattern`` has a ``$`` that is neither escaped nor in
+    a character class. Python's ``$`` also matches before a trailing
+    ``\\n``; RE2's only at the absolute end, so ``^a$`` accepts
+    ``"a\\n"`` in one and rejects it in the other. A ``]`` right after
+    ``[`` or ``[^`` is a literal member, as in Python."""
+    i, n, cls_start = 0, len(pattern), None
+    while i < n:
+        c = pattern[i]
+        if c == "\\":
+            i += 2
+            continue
+        if cls_start is not None:
+            if c == "]" and i > cls_start:
+                cls_start = None
+        elif c == "[":
+            cls_start = i + 1 + (pattern[i + 1:i + 2] == "^")
+        elif c == "$":
+            return True
+        i += 1
+    return False
+
+
 def re2_safe_pattern(pattern: str) -> str | None:
     """RE2 form of an ECMA/Python schema pattern, or None when the
     pattern must take the per-value Python path. Only called for
@@ -107,15 +130,16 @@ def re2_safe_pattern(pattern: str) -> str | None:
     supports the spelling natively, same semantics without backrefs)
     and the ``\\A``/``\\Z`` anchors (``\\Z`` translates to RE2's
     ``\\z`` — both mean absolute end in these two dialects). Rejected:
-    backrefs, comments, lookaround, word boundaries, and the
-    ASCII-vs-Unicode class shorthands. A final probe compiles the
+    backrefs, comments, lookaround, word boundaries, the
+    ASCII-vs-Unicode class shorthands, and the ``$`` anchor (see
+    :func:`_has_dollar_anchor`). A final probe compiles the
     candidate through pyarrow.compute itself (authoritative — catches
     anything RE2 rejects that the token checks missed)."""
     if _CLASS_SHORTHAND.search(pattern):
         return None
     if any(tok in pattern for tok in _RE2_UNSUPPORTED):
         return None
-    if _NUMERIC_BACKREF.search(pattern):
+    if _NUMERIC_BACKREF.search(pattern) or _has_dollar_anchor(pattern):
         return None
     try:
         # the Python ground truth must accept it in ITS dialect

@@ -6,7 +6,9 @@ partition-granular and idempotently resumable:
 
 1. list input partitions; anti-set against lineage rows marked 'done'
    → remaining work set (partition-pruned scan — only those directories
-   are read, SURVEY 2(b).1);
+   are read, SURVEY 2(b).1). The input table is opened ONCE per call;
+   the compiled plan, each batch's pruned scan and the global
+   constraints all read from that one listing;
 2. run the fused validate+stats pass over the remaining partitions in
    batches of ``partitions_per_batch`` (one Spark job per batch, NOT per
    partition — per-partition jobs would be a driver-side loop that can't
@@ -21,15 +23,24 @@ text-invariant) run after the per-partition pass over the full table —
 they are global by nature and are recorded in the verdicts under
 partition_id='__global__'.
 
+A plan is compiled once per (session, schema, input schema) and reused
+across calls and batches: a small driver-side LRU keyed on the Spark
+application id, the canonical schema JSON and the input StructType JSON
+(see ``_plan_for``). ``compile_plan`` itself stays uncached.
+
 Per-stage wall-clock is recorded in RunResult.stage_secs (BASELINE.md
 protocol step 5) so scaling regressions are attributable to
-scan+validate vs constraint shuffles vs sink commits.
+scan+validate vs constraint shuffles vs sink commits; compile time is
+RunResult.compile_s.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import threading
 import time
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -102,6 +113,42 @@ class RunResult:
     #: per-stage wall seconds: validate_sink / stats / verdict_commit /
     #: constraints — the attribution record for scaling analysis
     stage_secs: dict = field(default_factory=dict)
+    #: seconds this call spent in compile_plan (0.0 on a plan-cache hit)
+    compile_s: float = 0.0
+
+
+#: compiled plans by (application id, schema JSON, input StructType
+#: JSON), least recently used first. Keyed on values, never on id() of
+#: a py4j object: ids are reused after GC. The application id scopes
+#: each plan to the session whose JVM built its Column trees (and
+#: probed its regexes); compile errors are never stored.
+_PLANS: OrderedDict = OrderedDict()
+_PLANS_MAX = 8
+_PLANS_LOCK = threading.Lock()
+
+
+def _plan_for(spark: SparkSession, schema: dict, input_schema) -> tuple[CompiledPlan, float]:
+    """The compiled plan for ``schema`` over ``input_schema`` in this
+    session, and the seconds spent compiling it (0.0 on a hit)."""
+    try:
+        key = (spark.sparkContext.applicationId,
+               json.dumps(schema, sort_keys=True), input_schema.json())
+    except (TypeError, ValueError):  # not plain JSON: no canonical key, no reuse
+        t0 = time.perf_counter()
+        return compile_plan(schema, input_schema), time.perf_counter() - t0
+    with _PLANS_LOCK:
+        plan = _PLANS.get(key)
+        if plan is not None:
+            _PLANS.move_to_end(key)
+            return plan, 0.0
+    t0 = time.perf_counter()
+    plan = compile_plan(schema, input_schema)
+    compile_s = time.perf_counter() - t0
+    with _PLANS_LOCK:
+        _PLANS[key] = plan
+        while len(_PLANS) > _PLANS_MAX:
+            _PLANS.popitem(last=False)
+    return plan, compile_s
 
 
 def _lineage_table(spark: SparkSession, cfg: RunConfig) -> ParquetTable:
@@ -231,7 +278,11 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
     remaining = [p for p in all_parts if p not in done]
     _clean_stale_violation_batches(spark, cfg)
 
-    plan: CompiledPlan = compile_plan(cfg.schema, table.read(partitions=[]).schema)
+    # one listing + schema inference for the whole call: the batches
+    # prune it with the same partition predicate table.read(partitions)
+    # builds, and the global constraints scan it whole
+    base = table.read()
+    plan, compile_s = _plan_for(spark, cfg.schema, base.schema)
 
     batch_size = cfg.partitions_per_batch or max(len(remaining), 1)
     batches = [remaining[i : i + batch_size] for i in range(0, len(remaining), batch_size)]
@@ -259,7 +310,7 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
     done_now: list = []
     for batch in batches:
         started = time.time()
-        df = table.read(partitions=batch)
+        df = base.filter(F.col(table.partition_col).isin(batch))
         stats_cols = cfg.stats_columns or [cfg.key_col]
         # opt-in single-scan regime: per-partition stats ride the
         # violations-write job as Observation aggregates
@@ -396,8 +447,8 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
     # ---- global constraints (cross-partition by nature)
     t0 = time.time()
     global_viol = 0
-    if done_now or done:
-        full = table.read()
+    if (done_now or done) and (cfg.unique_keys or cfg.fk is not None
+                               or cfg.text_invariant_ref is not None):
         gv: list[DataFrame] = []
         for key in cfg.unique_keys:
             # hash-compressed two-stage plan: the big exchange carries
@@ -406,10 +457,10 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
             # constraints.duplicate_keys_hashed; cfg.unique_plan picks
             # the dup-heavy-safe variants)
             if cfg.unique_plan == "grouped":
-                dups = C.duplicate_keys(full, key)
+                dups = C.duplicate_keys(base, key)
             else:
                 dups = C.duplicate_keys_hashed(
-                    full, key,
+                    base, key,
                     broadcast_candidates=(cfg.unique_plan == "hashed"))
             gv.append(
                 dups.select(
@@ -429,20 +480,19 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
             # urls is O(table) cache — two cheap scans beat one impossible
             # cache. Spark shares nothing across actions without persist.
             child, ck, pk = cfg.fk
-            gv.append(C.referential_violations(child, ck, full, pk, run_id=cfg.run_id))
+            gv.append(C.referential_violations(child, ck, base, pk, run_id=cfg.run_id))
         if cfg.text_invariant_ref is not None:
-            gv.append(C.invariant_violations(full, cfg.text_invariant_ref,
+            gv.append(C.invariant_violations(base, cfg.text_invariant_ref,
                                              key=cfg.key_col, run_id=cfg.run_id))
-        if gv:
-            allg = gv[0]
-            for g in gv[1:]:
-                allg = allg.unionByName(g)
-            allg = (allg.withColumn("partition_id", F.lit("__global__"))
-                    .withColumn("batch", F.lit("__global__")).repartition(1))
-            # write once; the count comes from the written parquet footers
-            # (metadata-only scan) instead of a cache + count + write trio
-            viol_t.overwrite_partitions(allg)
-            global_viol = viol_t.read(partitions=["__global__"]).count()
+        allg = gv[0]
+        for g in gv[1:]:
+            allg = allg.unionByName(g)
+        allg = (allg.withColumn("partition_id", F.lit("__global__"))
+                .withColumn("batch", F.lit("__global__")).repartition(1))
+        # write once; the count comes from the written parquet footers
+        # (metadata-only scan) instead of a cache + count + write trio
+        viol_t.overwrite_partitions(allg)
+        global_viol = viol_t.read(partitions=["__global__"]).count()
     stage["constraints"] = time.time() - t0
 
     return RunResult(
@@ -453,4 +503,5 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
         violation_rows=total_viol,
         global_violations=global_viol,
         stage_secs={k: round(v, 3) for k, v in stage.items()},
+        compile_s=round(compile_s, 3),
     )
