@@ -118,9 +118,10 @@ def _max_isin_literals(plan) -> int:
 
 
 def test_no_plan_inlines_an_enum_past_the_literal_limit(spark):
-    """ENUM_LITERAL_MAX bounds every literal isin, element lambdas
-    included: an items / additionalItems / map-value enum past it leaves
-    the native tier (same verdicts) instead of inlining 1500 literals."""
+    """ENUM_LITERAL_MAX bounds string enums in element lambdas as it does
+    at column level: an items / additionalItems / map-value enum past it
+    leaves the native tier (same verdicts) instead of inlining 1500
+    literals."""
     from themis_spark.plans.vector_checks import ENUM_LITERAL_MAX
 
     big = [f"m{i:05d}" for i in range(1500)]
@@ -146,3 +147,20 @@ def test_no_plan_inlines_an_enum_past_the_literal_limit(spark):
     got = [sorted(r["v"]) for r in df.select(F.transform(
         plan.violations_col(), lambda v: v["keyword"]).alias("v")).collect()]
     assert got == [[], ["enum", "enum", "enum"], []]
+
+
+def test_root_branch_keeps_an_enum_past_the_literal_limit(spark):
+    """A root anyOf branch has no Arrow fallback: an items enum past
+    ENUM_LITERAL_MAX there still compiles, as an inline isin."""
+    big = [f"m{i:05d}" for i in range(1500)]
+    schema = {"anyOf": [{"properties": {
+        "tags": {"type": "array", "items": {"enum": big}}}}]}
+    df = spark.createDataFrame(
+        [(["m00001", "m01499"],), (["m00001", "nope"],), (None,)],
+        "tags array<string>")
+    plan = compile_plan(schema, df.schema)
+    assert not plan.arrow_specs
+    assert _max_isin_literals(plan) == len(big)
+    got = [sorted(r["v"]) for r in df.select(F.transform(
+        plan.violations_col(), lambda v: v["keyword"]).alias("v")).collect()]
+    assert got == [[], ["anyOf"], []]

@@ -36,6 +36,7 @@ still pass.
 
 from __future__ import annotations
 
+import contextvars
 import re
 from dataclasses import dataclass, field
 from functools import reduce
@@ -341,6 +342,11 @@ _DATETIME_NATIVE_RE = (
 
 PredBuilder = Callable[[Column], Column]
 
+#: True while a root combinator/dependency branch compiles. A branch
+#: predicate has no Arrow fallback, so there an element enum past
+#: ENUM_LITERAL_MAX inlines its isin rather than fail the compile.
+_IN_ROOT_BRANCH = contextvars.ContextVar("_IN_ROOT_BRANCH", default=False)
+
 
 def _scalar_pred_builders(
     node: Any, dt: T.DataType, reg: SchemaRegistry, base: str,
@@ -394,7 +400,8 @@ def _scalar_pred_builders(
         if any(isinstance(m, (list, dict)) for m in members):
             raise _NotNative("non-scalar enum members need deep equality")
         scalars = _enum_members_for(members, dt)
-        if len(scalars) > vector_checks.ENUM_LITERAL_MAX:
+        if (len(scalars) > vector_checks.ENUM_LITERAL_MAX
+                and not _IN_ROOT_BRANCH.get()):
             # same bound as the column-level enum: a longer literal isin
             # costs seconds of driver-side planning per query, and an
             # element lambda has no broadcast-hash-set form
@@ -1308,6 +1315,7 @@ def _root_branch_checks(branch: Any, spath: str, fields: dict,
         if name not in fields:
             continue
         plan.columns_needed.add(name)
+        token = _IN_ROOT_BRANCH.set(True)
         try:
             out.extend(_compile_sub(F.col(name), sub, fields[name],
                                     f"{spath}/properties/{name}", f"$.{name}",
@@ -1315,6 +1323,8 @@ def _root_branch_checks(branch: Any, spath: str, fields: dict,
         except _NotNative as exc:
             raise UnsupportedSchemaError(
                 f"root branch property {name!r} at {spath}: {exc}") from exc
+        finally:
+            _IN_ROOT_BRANCH.reset(token)
     for k, dep in (branch.get("dependencies") or {}).items():
         trigger = F.col(k).isNotNull() if k in fields else F.lit(False)
         if not isinstance(dep, dict):

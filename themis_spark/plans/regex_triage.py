@@ -78,35 +78,30 @@ _RE2_UNSUPPORTED = ("(?P=", "(?#", "(?=", "(?!", "(?<=", "(?<!",
 _NUMERIC_BACKREF = re.compile(r"\\[1-9]")
 
 
-def _translate_z_anchor(pattern: str) -> str:
-    """Python's ``\\Z`` (absolute end) is RE2's ``\\z`` — translate the
-    ESCAPE SEQUENCE only, walking escape state so a literal ``\\\\Z``
-    (backslash + Z) is left alone."""
-    out = []
-    i = 0
-    n = len(pattern)
+# an inline flag group that turns on MULTILINE, where Python's ``$``
+# matches before every ``\n``
+_MULTILINE_FLAG = re.compile(r"\(\?[a-zA-Z-]*m")
+
+
+def _translate_anchors(pattern: str) -> str | None:
+    """RE2 spelling of Python's end anchors, or None when a ``$`` has no
+    translation here.
+
+    Python's ``\\Z`` (absolute end) is RE2's ``\\z``. Python's ``$``
+    also matches before one trailing ``\\n``, RE2's only at the absolute
+    end: a ``$`` that ends the pattern or a top-level alternative
+    becomes ``\\n?\\z`` (nothing follows it, so the verdict is the
+    same); a ``$`` anywhere else, or under a multi-line flag, gives
+    None. Escape and class state are walked, so ``\\\\Z``, ``\\$`` and
+    ``[$]`` stay literal; a ``]`` right after ``[`` or ``[^`` is a
+    literal member, as in Python."""
+    out: list[str] = []
+    i, n, depth, cls_start = 0, len(pattern), 0, None
     while i < n:
         c = pattern[i]
         if c == "\\" and i + 1 < n:
             nxt = pattern[i + 1]
             out.append("\\z" if nxt == "Z" else c + nxt)
-            i += 2
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
-
-def _has_dollar_anchor(pattern: str) -> bool:
-    """True when ``pattern`` has a ``$`` that is neither escaped nor in
-    a character class. Python's ``$`` also matches before a trailing
-    ``\\n``; RE2's only at the absolute end, so ``^a$`` accepts
-    ``"a\\n"`` in one and rejects it in the other. A ``]`` right after
-    ``[`` or ``[^`` is a literal member, as in Python."""
-    i, n, cls_start = 0, len(pattern), None
-    while i < n:
-        c = pattern[i]
-        if c == "\\":
             i += 2
             continue
         if cls_start is not None:
@@ -114,10 +109,18 @@ def _has_dollar_anchor(pattern: str) -> bool:
                 cls_start = None
         elif c == "[":
             cls_start = i + 1 + (pattern[i + 1:i + 2] == "^")
+        elif c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
         elif c == "$":
-            return True
+            if (depth or pattern[i + 1:i + 2] not in ("", "|")
+                    or _MULTILINE_FLAG.search(pattern)):
+                return None
+            c = "\\n?\\z"
+        out.append(c)
         i += 1
-    return False
+    return "".join(out)
 
 
 def re2_safe_pattern(pattern: str) -> str | None:
@@ -128,25 +131,26 @@ def re2_safe_pattern(pattern: str) -> str | None:
 
     Accepted here: Python-spelling named groups ``(?P<g>…)`` (RE2
     supports the spelling natively, same semantics without backrefs)
-    and the ``\\A``/``\\Z`` anchors (``\\Z`` translates to RE2's
-    ``\\z`` — both mean absolute end in these two dialects). Rejected:
-    backrefs, comments, lookaround, word boundaries, the
-    ASCII-vs-Unicode class shorthands, and the ``$`` anchor (see
-    :func:`_has_dollar_anchor`). A final probe compiles the
+    and the ``\\A``/``\\Z``/``$`` anchors (see
+    :func:`_translate_anchors`). Rejected: backrefs, comments,
+    lookaround, word boundaries, the ASCII-vs-Unicode class shorthands,
+    and a ``$`` that is not final. A final probe compiles the
     candidate through pyarrow.compute itself (authoritative — catches
     anything RE2 rejects that the token checks missed)."""
     if _CLASS_SHORTHAND.search(pattern):
         return None
     if any(tok in pattern for tok in _RE2_UNSUPPORTED):
         return None
-    if _NUMERIC_BACKREF.search(pattern) or _has_dollar_anchor(pattern):
+    if _NUMERIC_BACKREF.search(pattern):
         return None
     try:
         # the Python ground truth must accept it in ITS dialect
         re.compile(python_pattern(pattern))
     except re.error:
         return None
-    out = _translate_z_anchor(pattern)
+    out = _translate_anchors(pattern)
+    if out is None:
+        return None
     try:
         import pyarrow as pa
         import pyarrow.compute as pc

@@ -23,11 +23,6 @@ text-invariant) run after the per-partition pass over the full table —
 they are global by nature and are recorded in the verdicts under
 partition_id='__global__'.
 
-A plan is compiled once per (session, schema, input schema) and reused
-across calls and batches: a small driver-side LRU keyed on the Spark
-application id, the canonical schema JSON and the input StructType JSON
-(see ``_plan_for``). ``compile_plan`` itself stays uncached.
-
 Per-stage wall-clock is recorded in RunResult.stage_secs (BASELINE.md
 protocol step 5) so scaling regressions are attributable to
 scan+validate vs constraint shuffles vs sink commits; compile time is
@@ -36,11 +31,8 @@ RunResult.compile_s.
 
 from __future__ import annotations
 
-import json
 import os
-import threading
 import time
-from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -113,42 +105,8 @@ class RunResult:
     #: per-stage wall seconds: validate_sink / stats / verdict_commit /
     #: constraints — the attribution record for scaling analysis
     stage_secs: dict = field(default_factory=dict)
-    #: seconds this call spent in compile_plan (0.0 on a plan-cache hit)
+    #: seconds this call spent in compile_plan (kept out of stage_secs)
     compile_s: float = 0.0
-
-
-#: compiled plans by (application id, schema JSON, input StructType
-#: JSON), least recently used first. Keyed on values, never on id() of
-#: a py4j object: ids are reused after GC. The application id scopes
-#: each plan to the session whose JVM built its Column trees (and
-#: probed its regexes); compile errors are never stored.
-_PLANS: OrderedDict = OrderedDict()
-_PLANS_MAX = 8
-_PLANS_LOCK = threading.Lock()
-
-
-def _plan_for(spark: SparkSession, schema: dict, input_schema) -> tuple[CompiledPlan, float]:
-    """The compiled plan for ``schema`` over ``input_schema`` in this
-    session, and the seconds spent compiling it (0.0 on a hit)."""
-    try:
-        key = (spark.sparkContext.applicationId,
-               json.dumps(schema, sort_keys=True), input_schema.json())
-    except (TypeError, ValueError):  # not plain JSON: no canonical key, no reuse
-        t0 = time.perf_counter()
-        return compile_plan(schema, input_schema), time.perf_counter() - t0
-    with _PLANS_LOCK:
-        plan = _PLANS.get(key)
-        if plan is not None:
-            _PLANS.move_to_end(key)
-            return plan, 0.0
-    t0 = time.perf_counter()
-    plan = compile_plan(schema, input_schema)
-    compile_s = time.perf_counter() - t0
-    with _PLANS_LOCK:
-        _PLANS[key] = plan
-        while len(_PLANS) > _PLANS_MAX:
-            _PLANS.popitem(last=False)
-    return plan, compile_s
 
 
 def _lineage_table(spark: SparkSession, cfg: RunConfig) -> ParquetTable:
@@ -282,7 +240,9 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
     # prune it with the same partition predicate table.read(partitions)
     # builds, and the global constraints scan it whole
     base = table.read()
-    plan, compile_s = _plan_for(spark, cfg.schema, base.schema)
+    t0 = time.perf_counter()
+    plan: CompiledPlan = compile_plan(cfg.schema, base.schema)
+    compile_s = time.perf_counter() - t0
 
     batch_size = cfg.partitions_per_batch or max(len(remaining), 1)
     batches = [remaining[i : i + batch_size] for i in range(0, len(remaining), batch_size)]

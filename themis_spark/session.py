@@ -34,6 +34,13 @@ ENGINE_CONF = {
     # controlled at WRITE time instead: the generators target ~32–64 MB
     # files so scans naturally produce ≥ cores input splits.
     "spark.sql.session.timeZone": "UTC",
+    # PySpark 4 otherwise records the Python call site of every Column
+    # and DataFrame call, about five py4j round trips each. compile_plan
+    # builds hundreds to thousands of Columns per plan, and their call
+    # sites would only name the compiler's own lines: on a cyclic-$ref
+    # Variant schema this took half of each compile (1.1 s → 0.5 s on a
+    # 4 vCPU VM, 12.9k → 3.8k round trips). Read once per Python process.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # batch-throughput GC: ParallelGC beats G1's pause-target behavior for
     # this allocation-heavy scan (variant probes, UTF8 strings) — no
     # latency SLO here, only docs/sec
