@@ -109,6 +109,8 @@ PROBES = [
     "Ω≈ç√", "tab\tsep", "https://x.example/a?b=1",
     # trailing newline: Python's ``$`` matches before it, RE2's does not
     "user@example.com\n", "2024\n", "ab-123\n",
+    # Java's other line terminators: Python's ``$`` and ``.`` ignore them
+    "abc\r", "abc\u0085", "abc\u2028", "abc\u2029", "a\rb",
 ]
 
 
@@ -266,6 +268,43 @@ def test_dollar_anchor_same_verdict_on_every_tier(spark, pat, route):
     assert want == {v: len(list(ref.iter_errors(v))) for v in values}
     assert got == want
     assert want["abc1\n"] == 0 and want["abc1\n\n"] == 1
+
+
+@pytest.mark.parametrize("pat", ["^abc$", "^a.b$"])
+def test_java_line_terminators_same_verdict_on_both_native_tiers(spark, pat):
+    """Java's ``$`` and ``.`` treat ``\\r``, ``\\u0085``, ``\\u2028`` and
+    ``\\u2029`` as line ends unless UNIX_LINES is on; Python's treat only
+    ``\\n``. The typed-column and the Variant tier must both give the
+    Python ground truth's verdict."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from themis_spark import compile_plan
+    from themis_spark.plans.pyvalidator import compile_python_validator
+
+    assert _route(pat) == "native"
+    values = ["abc", "abc\n", "abc\r", "abc\u0085", "abc\u2028",
+              "abc\u2029", "a\rb", "a\nb", "a\u2028b", "axb"]
+    sub = {"type": "string", "pattern": pat}
+    py = compile_python_validator(sub)
+    want = {v: len(py.validate(v)) for v in values}
+    if pat == "^abc$":
+        assert (want["abc\n"], want["abc\r"], want["abc\u2028"]) == (0, 1, 1)
+    else:
+        assert (want["a\rb"], want["a\u2028b"], want["a\nb"]) == (0, 0, 1)
+
+    typed = {"id": "lt", "type": "object", "properties": {"s": sub}}
+    variant = {"id": "lt", "type": "object", "properties": {
+        "doc": {"type": "object", "properties": {"s": sub}}}}
+    df = spark.createDataFrame(
+        [(v, json.dumps({"s": v})) for v in values], "s string, doc string")
+    for schema in (typed, variant):
+        plan = compile_plan(schema, df.schema)
+        assert not plan.arrow_specs and not plan.main_calls_python
+        got = {r["s"]: r["n"] for r in plan.prepare(df).select(
+            "s", F.size(plan.violations_col()).alias("n")).collect()}
+        assert got == want, schema
 
 
 def test_non_python_compilable_pattern_fails_loudly(spark):

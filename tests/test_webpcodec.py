@@ -74,6 +74,27 @@ def test_predictor_modes_invert(mode):
     assert res == pix, mode
 
 
+# 2x2 image, one predictor block. The decoded pixels are
+#   P0 = ff000000 (residue 0 + opaque black)   P1 = ff101010 (LEFT + residue)
+#   P2 = ff404040 (TOP + residue)               P3 = prediction + residue 0
+# P3 sits on the right edge: L = P2, T = P1, TL = P0, and TR is the
+# leftmost pixel of the current row, P2 (not T). Average2 is the
+# per-channel floor mean. Expected values worked out by hand:
+#   mode 3  TR                                   -> 40
+#   mode 5  avg(avg(L, TR), T) = avg(40, 10)     -> 28
+#   mode 9  avg(T, TR) = avg(10, 40)             -> 28
+#   mode 10 avg(avg(L, TL), avg(T, TR))
+#           = avg(avg(40, 00), 28) = avg(20, 28) -> 24
+@pytest.mark.parametrize("mode,want", [
+    (3, 0xFF404040), (5, 0xFF282828), (9, 0xFF282828), (10, 0xFF242424)],
+    ids=["mode3", "mode5", "mode9", "mode10"])
+def test_predictor_right_edge_top_right_is_row_start(mode, want):
+    res = [0x00000000, 0x00101010, 0x00404040, 0x00000000]
+    sub = [0xFF000000 | (mode << 8)]
+    WC._predictor_inverse(res, 2, 2, sub, 2, 1)
+    assert res == [0xFF000000, 0xFF101010, 0xFF404040, want]
+
+
 def test_color_transform_inverts():
     w, h = 10, 6
     img = _pattern(w, h, seed=9)
@@ -95,6 +116,10 @@ def test_distance_map_head_entries():
     assert WC._DIST_MAP[3] == (-1, 1)
     assert WC._DIST_MAP[4] == (0, 2)
     assert len(WC._DIST_MAP) == 120
+    # spec table: dy runs 0..7 only, so its tail is the far right column
+    assert WC._DIST_MAP[96] == (8, 0)
+    assert WC._DIST_MAP[119] == (8, 7)
+    assert max(dy for _, dy in WC._DIST_MAP) == 7
     # dist resolution: left pixel / row above / clamped minimum
     assert WC._plane_to_dist(2, 50) == 1
     assert WC._plane_to_dist(1, 50) == 50

@@ -248,7 +248,7 @@ def _prefix_encode(value: int) -> tuple[int, int, int]:
 # ordered by squared distance, then larger dy first, then |dx| with the
 # positive offset before the negative. dist = dy*width + dx (min 1).
 def _gen_distance_map() -> list[tuple[int, int]]:
-    cand = [(x, y) for y in range(9) for x in range(-7, 9)
+    cand = [(x, y) for y in range(8) for x in range(-7, 9)
             if y > 0 or x > 0]
     cand.sort(key=lambda p: (p[0] * p[0] + p[1] * p[1], -p[1],
                              abs(p[0]), p[0] < 0))
@@ -361,8 +361,9 @@ def _predictor_inverse(pix: list[int], w: int, h: int, sub: list[int],
     """In-place: pix holds residues; add the per-block prediction, in
     scan order (predictions read already-reconstructed neighbors).
     Edge rules per spec: (0,0) predicts opaque black, top row predicts
-    LEFT, left column predicts TOP; TR on the right edge wraps to the
-    leftmost pixel of the same row (libwebp convention: row start)."""
+    LEFT, left column predicts TOP; TR on the right edge is the
+    leftmost pixel of the CURRENT row (spec §4.1: ``pix[i - w + 1]``
+    with no special case, since that index wraps to the row start)."""
     for y in range(h):
         for x in range(w):
             i = y * w + x
@@ -377,7 +378,7 @@ def _predictor_inverse(pix: list[int], w: int, h: int, sub: list[int],
                         >> 8) & 0xFF
                 l = pix[i - 1]
                 t = pix[i - w]
-                tr = pix[i - w + 1] if x + 1 < w else pix[i - w]
+                tr = pix[i - w + 1]
                 tl = pix[i - w - 1]
                 pred = _predict(mode, l, t, tr, tl)
             pix[i] = _add_px(pix[i], pred)
@@ -401,7 +402,7 @@ def _predictor_forward(pix: list[int], w: int, h: int, sub: list[int],
             else:
                 mode = (sub[(y >> size_bits) * sub_w + (x >> size_bits)]
                         >> 8) & 0xFF
-                tr = pix[i - w + 1] if x + 1 < w else pix[i - w]
+                tr = pix[i - w + 1]
                 pred = _predict(mode, pix[i - 1], pix[i - w], tr,
                                 pix[i - w - 1])
             out[i] = _sub_px(pix[i], pred)

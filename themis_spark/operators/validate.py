@@ -30,9 +30,22 @@ def annotate(
     drag ``html`` binary through the pass unless a check reads it) and
     attach the fused ``violations`` array + ``n_violations``.
 
-    ``defer_residual=True`` keeps the deep-recursion Arrow residue OUT of
-    this pass (no Python workers in the main scan); the caller must union
-    :func:`residual_violations_df` into the violation rows."""
+    The deep-recursion residue (rows past the Variant unroll depth, see
+    ``CompiledPlan.residual_gate``) is validated one of two ways:
+
+    * ``defer_residual=False`` folds it in: the gated Arrow validator
+      rides this projection, so the frame is complete. The runner takes
+      this arm when the projection already calls Python
+      (``plan.main_calls_python``): the UDF joins the ArrowEvalPython
+      node that runs anyway, with no second scan or JSON parse.
+    * ``defer_residual=True`` keeps it OUT (no Python workers in the
+      main scan); the caller owes :func:`residual_violations_df` rows for
+      the gated rows. The runner takes this arm for Python-free plans and
+      runs that job only when some row of the batch is gated.
+
+    Whenever the plan has a gate, the frame also carries ``_residual_row``
+    (1 for a gated row, else 0), on both arms, so one aggregate over the
+    write job counts the rows on the residual path."""
     passthrough = [c for c in (keep or df.columns) if c in df.columns]
     # prepare(): materialize try_parse_json once per dynamic-JSON column —
     # the variant-native checks then probe the parsed binary instead of
@@ -41,13 +54,16 @@ def annotate(
         *passthrough,
         plan.violations_col(include_gated_arrow=not defer_residual).alias("violations"),
     ]
-    if defer_residual and plan.residual_gate() is not None:
-        # marker: this frame's n_violations EXCLUDES the deep-recursion
-        # residue — verdicts_df refuses it so callers can't silently
-        # compute passed=true for partitions whose only violations are in
-        # the residual (round-1 ADVICE). The runner counts from the
-        # unioned violation rows instead.
-        cols.append(F.lit(True).alias("_residual_deferred"))
+    gate = plan.residual_gate()
+    if gate is not None:
+        cols.append(gate.cast("int").alias("_residual_row"))
+        if defer_residual:
+            # marker: this frame's n_violations EXCLUDES the deep-recursion
+            # residue — verdicts_df refuses it so callers can't silently
+            # compute passed=true for partitions whose only violations are
+            # in the residual (round-1 ADVICE). The runner adds the
+            # residual job's counts instead.
+            cols.append(F.lit(True).alias("_residual_deferred"))
     out = plan.prepare(df).select(*cols)
     return out.withColumn("n_violations", F.size("violations"))
 
@@ -92,12 +108,16 @@ def residual_violations_df(
 ) -> DataFrame | None:
     """Violation rows for the deep-recursion residue: rows whose dynamic
     JSON exceeds the variant unroll depth, validated WHOLE by the Arrow
-    batch validator (native checks are deep-gated off, so the union with
-    the main pass never double-reports).
+    batch validator (native checks are deep-gated off, so these rows and
+    those of ``annotate(defer_residual=True)`` never double-report).
 
     Runs as its own job over a column-pruned scan (JSON column + keys
-    only — never text/html) so the main pass stays Python-free. The gate
-    is evaluated INSIDE the projection — ``when(gate, payload)`` NULLs
+    only — never text/html) so the main pass stays Python-free. The
+    runner runs it only for a Python-free plan and only when the main
+    write job counted gated rows (``_residual_row``); it then appends
+    these rows into the batch's violations directory after the main
+    overwrite and before the lineage commit. The gate is evaluated
+    INSIDE the projection — ``when(gate, payload)`` NULLs
     the UDF input for shallow rows — and deliberately NOT as a
     ``.filter(gate)``: Spark's predicate pushdown inlines the gate's
     aliased ``try_parse_json`` into a Filter node, and FilterExec codegen
@@ -156,7 +176,7 @@ def verdicts_df(
         raise ValueError(
             "annotate(defer_residual=True) produced this frame and the plan "
             "has a gated Arrow residue: its violation counts are incomplete. "
-            "Union residual_violations_df() rows and aggregate those instead "
+            "Add the counts of residual_violations_df() rows instead "
             "(see runner.run_validation).")
     part: Column = (
         F.col(partition_col).cast("string")

@@ -21,25 +21,25 @@ from pyspark.sql.functions import pandas_udf
 from themis_spark.plans.compiler import VIOLATION_ARRAY_TYPE
 from themis_spark.plans.pyvalidator import PyValidator
 
-# Python side emits ONE delimited string per row (unit/record separators);
-# the JVM splits it back into array<struct> natively. Building nested
-# list<struct> Arrow arrays from Python objects is the slowest part of the
-# batch boundary — flat strings cross it at memcpy speed and the decode
-# stays inside whole-stage codegen.
-_US = "\x1f"  # field separator within one violation
-_RS = "\x1e"  # separator between violations
-
 
 def violations_pandas_udf(validator: PyValidator, instance_prefix: str = "$"):
-    """Build an Arrow-batched UDF: JSON-string column → encoded violations
-    string (NULL = no violations). Decode with :func:`decode_violations`.
+    """Build an Arrow-batched UDF: JSON-string column → array<violation>
+    (NULL = no violations). Wrap it in :func:`decode_violations`.
+
+    The UDF returns the violation structs themselves, so the JVM side
+    needs no decode beyond a ``coalesce``. Splitting a delimited string
+    back into structs would need ``transform``, a higher-order function:
+    it is CodegenFallback and takes the whole fused projection around it
+    out of whole-stage codegen. Only rows with violations build Python
+    structs.
 
     The validator closure tree is compiled ONCE on the driver and
     cloudpickled to executors; regexes inside it are pre-compiled
     (reference parity: Themis precompiles RegExp objects at codegen time).
     """
     validate = validator.validate
-    malformed = "type" + _US + instance_prefix + _US + f"{validator.root_uri}#"
+    malformed = [{"keyword": "type", "instance_path": instance_prefix,
+                  "schema_path": f"{validator.root_uri}#", "detail": None}]
 
     def _batch(series: pd.Series) -> pd.Series:
         out = []
@@ -54,48 +54,15 @@ def violations_pandas_udf(validator: PyValidator, instance_prefix: str = "$"):
                 continue
             vs = validate(doc, instance_prefix)
             out.append(
-                _RS.join(
-                    v.keyword + _US + v.instance_path + _US + v.schema_path
-                    for v in vs
-                )
-                if vs
-                else None
+                [{"keyword": v.keyword, "instance_path": v.instance_path,
+                  "schema_path": v.schema_path, "detail": None} for v in vs]
+                or None
             )
         return pd.Series(out)
 
-    return pandas_udf(_batch, "string")
+    return pandas_udf(_batch, VIOLATION_ARRAY_TYPE)
 
 
-def decode_violations(encoded: Column) -> Column:
-    """JVM-side decode of the UDF's string encoding → array<violation>."""
-    return F.when(
-        encoded.isNull(), F.expr("array()").cast(VIOLATION_ARRAY_TYPE)
-    ).otherwise(
-        F.transform(
-            F.split(encoded, _RS),
-            lambda e: F.struct(
-                F.split_part(e, F.lit(_US), F.lit(1)).alias("keyword"),
-                F.split_part(e, F.lit(_US), F.lit(2)).alias("instance_path"),
-                F.split_part(e, F.lit(_US), F.lit(3)).alias("schema_path"),
-                F.lit(None).cast("string").alias("detail"),
-            ),
-        )
-    )
-
-
-def verdict_pandas_udf(validator: PyValidator):
-    """JSON-string column → boolean validity (conformance-suite harness)."""
-    validate = validator.validate
-
-    def _batch(series: pd.Series) -> pd.Series:
-        vals = []
-        for raw in series:
-            try:
-                doc = json.loads(raw) if isinstance(raw, str) else raw
-            except (ValueError, TypeError):
-                vals.append(False)
-                continue
-            vals.append(not validate(doc))
-        return pd.Series(vals)
-
-    return pandas_udf(_batch, "boolean")
+def decode_violations(violations: Column) -> Column:
+    """The UDF's NULL (no violations) → empty array<violation>."""
+    return F.coalesce(violations, F.array().cast(VIOLATION_ARRAY_TYPE))

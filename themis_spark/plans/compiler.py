@@ -98,6 +98,11 @@ class ColumnCheck:
     predicate: Column  # True/NULL = pass, False = violation
     detail: Column
     column: str
+    #: "native": the predicate runs inside the JVM; "arrow": it calls a
+    #: pandas UDF (RE2 pattern, hash-set enum), so a projection holding it
+    #: already runs Python workers. Checks composed from others inherit
+    #: "arrow" when any part has it (``_joint_tier``).
+    tier: str = "native"
 
 
 @dataclass
@@ -193,9 +198,10 @@ class CompiledPlan:
         composed in ONE select (single fused pass per partition).
 
         ``include_gated_arrow=False`` omits the gate-guarded Arrow specs
-        (the deep-recursion residue): callers then run those through
-        ``residual_gate()`` + a separate tiny filtered job so the big
-        scan never launches Python workers on clean data."""
+        (the deep-recursion residue): callers then validate the rows
+        ``residual_gate()`` selects in a separate job, so a main scan
+        without other Python never launches Python workers on clean
+        data (see operators.validate.annotate)."""
         col = self.native_violations_col()
         for arr in self.variant_arrays:
             col = F.concat(col, arr)
@@ -216,6 +222,14 @@ class CompiledPlan:
             col = F.concat(col, decode_violations(udf(payload)))
         return col
 
+    @property
+    def main_calls_python(self) -> bool:
+        """Does the main projection (``violations_col(False)``) already
+        call Python: an Arrow-tier check or an ungated Arrow spec? Read
+        from the tiers compile recorded, never from the Column trees."""
+        return (any(c.tier == "arrow" for c in self.checks)
+                or any(s.gate is None for s in self.arrow_specs))
+
     def residual_gate(self) -> Column | None:
         """Row predicate selecting the Arrow residue (rows deeper than
         the variant unroll); None when no gated spec exists."""
@@ -226,9 +240,6 @@ class CompiledPlan:
         for g in gates[1:]:
             out = out | F.coalesce(g, F.lit(False))
         return out
-
-    def valid_col(self) -> Column:
-        return F.size(self.violations_col()) == 0
 
 
 VIOLATION_STRUCT_TYPE = T.StructType(
@@ -284,6 +295,11 @@ def _str_ops_col(col: Column, dt: T.DataType) -> Column:
     canonical string form — EXPLICIT cast (ANSI mode rejects the implicit
     timestamp→string coercion rlike/length would need)."""
     return col if isinstance(dt, T.StringType) else col.cast("string")
+
+
+def _joint_tier(tiers) -> str:
+    """Tier of a check composed from parts of the given tiers."""
+    return "arrow" if "arrow" in tiers else "native"
 
 
 def _and_all(preds: list[Column]) -> Column:
@@ -581,10 +597,11 @@ def _compile_sub(
     is_num = isinstance(dt, _NUMERIC)
 
     def add(keyword: str, pred: Column, leaf: str | None = None,
-            ip: str | None = None, detail: Column | None = None) -> None:
+            ip: str | None = None, detail: Column | None = None,
+            tier: str = "native") -> None:
         out.append(ColumnCheck(
             keyword, ip or ipath, f"{spath}/{leaf or keyword}", pred,
-            detail if detail is not None else _detail(col), colname))
+            detail if detail is not None else _detail(col), colname, tier))
 
     # ---- type ------------------------------------------------------------
     if "type" in node:
@@ -614,7 +631,7 @@ def _compile_sub(
             # Arrow C++ hash index — a >10^3-literal isin list would
             # bloat the plan and the generated code instead
             member = vector_checks.broadcast_isin_predicate(scalars)
-            add("enum", null_pass | member(col))
+            add("enum", null_pass | member(col), tier="arrow")
         else:
             add("enum",
                 null_pass | (col.isin(scalars) if scalars else F.lit(False)))
@@ -636,7 +653,8 @@ def _compile_sub(
                 if r2 is None:
                     raise _NotNative(f"pattern dialect: {node['pattern']!r}")
                 matcher = vector_checks.re2_pattern_predicate(r2)
-                add("pattern", null_pass | matcher(_str_ops_col(col, dt)))
+                add("pattern", null_pass | matcher(_str_ops_col(col, dt)),
+                    tier="arrow")
     if "minLength" in node:
         handled.add("minLength")
         if is_str:
@@ -782,24 +800,26 @@ def _compile_sub(
                                     colname, reg, base, stack))
     if "anyOf" in node:
         handled.add("anyOf")
-        preds = [
+        branches = [
             _valid_pred(col, b, dt, f"{spath}/anyOf/{i}", ipath, colname, reg, base, stack)
             for i, b in enumerate(node["anyOf"])
         ]
-        add("anyOf", null_pass | _or_all(preds), leaf="anyOf")
+        add("anyOf", null_pass | _or_all([p for p, _ in branches]), leaf="anyOf",
+            tier=_joint_tier([t for _, t in branches]))
     if "oneOf" in node:
         handled.add("oneOf")
-        preds = [
+        branches = [
             _valid_pred(col, b, dt, f"{spath}/oneOf/{i}", ipath, colname, reg, base, stack)
             for i, b in enumerate(node["oneOf"])
         ]
-        hits = sum((p.cast("int") for p in preds), F.lit(0))
-        add("oneOf", null_pass | (hits == 1), leaf="oneOf")
+        hits = sum((p.cast("int") for p, _ in branches), F.lit(0))
+        add("oneOf", null_pass | (hits == 1), leaf="oneOf",
+            tier=_joint_tier([t for _, t in branches]))
     if "not" in node:
         handled.add("not")
-        p = _valid_pred(col, node["not"], dt, f"{spath}/not", ipath, colname,
-                        reg, base, stack)
-        add("not", null_pass | ~p, leaf="not")
+        p, tier = _valid_pred(col, node["not"], dt, f"{spath}/not", ipath,
+                              colname, reg, base, stack)
+        add("not", null_pass | ~p, leaf="not", tier=tier)
 
     extra = set(node) - handled
     if extra:
@@ -817,11 +837,14 @@ def _forall_ok(arr: Column, fn: PredBuilder) -> Column:
     return F.forall(arr, _ok)
 
 
-def _valid_pred(col, node, dt, spath, ipath, colname, reg, base, stack) -> Column:
+def _valid_pred(col, node, dt, spath, ipath, colname, reg, base,
+                stack) -> tuple[Column, str]:
     """'value satisfies node' as one Column (three-valued-safe): the
-    conjunction of the compiled checks with NULL coerced to pass."""
+    conjunction of the compiled checks with NULL coerced to pass, and
+    the joint tier of those checks."""
     checks = _compile_sub(col, node, dt, spath, ipath, colname, reg, base, stack)
-    return _and_all([F.coalesce(c.predicate, F.lit(True)) for c in checks])
+    return (_and_all([F.coalesce(c.predicate, F.lit(True)) for c in checks]),
+            _joint_tier([c.tier for c in checks]))
 
 
 def _compile_struct(col, node, dt: T.StructType, spath, ipath, colname,
@@ -907,7 +930,7 @@ def _compile_struct(col, node, dt: T.StructType, spath, ipath, colname,
                 out.append(ColumnCheck(
                     c.keyword, c.instance_path, c.schema_path,
                     ~trigger | F.coalesce(c.predicate, F.lit(True)),
-                    c.detail, colname))
+                    c.detail, colname, c.tier))
         else:
             dl = [dep] if isinstance(dep, str) else list(dep)
             for dk in dl:
@@ -1026,7 +1049,7 @@ def _compile_map(col, node, dt: T.MapType, spath, ipath, colname,
                 out.append(ColumnCheck(
                     c.keyword, c.instance_path, c.schema_path,
                     ~trigger | F.coalesce(c.predicate, F.lit(True)),
-                    c.detail, colname))
+                    c.detail, colname, c.tier))
         else:
             dl = [dep] if isinstance(dep, str) else list(dep)
             for dk in dl:
@@ -1247,7 +1270,7 @@ def _compile_object_level(node: dict, spath: str, plan: CompiledPlan,
                 plan.checks.append(ColumnCheck(
                     c.keyword, c.instance_path, c.schema_path,
                     ~trigger | F.coalesce(c.predicate, F.lit(True)),
-                    c.detail, c.column))
+                    c.detail, c.column, c.tier))
         else:
             dl = [dep] if isinstance(dep, str) else list(dep)
             for dk in dl:
@@ -1271,22 +1294,25 @@ def _compile_object_level(node: dict, spath: str, plan: CompiledPlan,
                                   registry, root_uri, unroll)
     for comb in ("anyOf", "oneOf"):
         if comb in node:
-            preds = []
+            preds, tiers = [], []
             for i, b in enumerate(node[comb]):
                 checks = _root_branch_checks(b, f"{spath}/{comb}/{i}", fields,
                                              registry, root_uri, plan)
                 preds.append(_and_all(
                     [F.coalesce(c.predicate, F.lit(True)) for c in checks]))
+                tiers += [c.tier for c in checks]
             pred = _or_all(preds) if comb == "anyOf" else (
                 sum((p.cast("int") for p in preds), F.lit(0)) == 1)
             plan.checks.append(ColumnCheck(
-                comb, "$", f"{spath}/{comb}", pred, F.lit(f"<{comb}>"), "*"))
+                comb, "$", f"{spath}/{comb}", pred, F.lit(f"<{comb}>"), "*",
+                _joint_tier(tiers)))
     if "not" in node:
         checks = _root_branch_checks(node["not"], f"{spath}/not", fields,
                                      registry, root_uri, plan)
         p = _and_all([F.coalesce(c.predicate, F.lit(True)) for c in checks])
         plan.checks.append(ColumnCheck(
-            "not", "$", f"{spath}/not", ~p, F.lit("<not>"), "*"))
+            "not", "$", f"{spath}/not", ~p, F.lit("<not>"), "*",
+            _joint_tier([c.tier for c in checks])))
 
 
 def _root_branch_checks(branch: Any, spath: str, fields: dict,

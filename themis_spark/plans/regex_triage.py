@@ -10,6 +10,8 @@ semantics); the native Column paths evaluate them with Java regex via
    the whole job long after compile succeeded.
 2. ``\\d``/``\\w``/``\\b``/``\\s`` default to ASCII classes in Java but
    Unicode in Python ``re`` — silent divergence on non-ASCII input.
+3. Java's ``$`` and ``.`` know five line terminators, Python's only
+   ``\\n`` — aligned by the ``(?d)`` (UNIX_LINES) prefix.
 
 ``java_safe_pattern`` is the compile-time bail-out both native paths
 share: it returns a Java pattern aligned with Python semantics for the
@@ -165,7 +167,11 @@ def java_safe_pattern(pattern: str) -> str | None:
     """Java-regex form of an ECMA/Python schema pattern, or None when the
     pattern must take the Python (Arrow) path.
 
-    The returned pattern may carry a leading ``(?U)`` so Java's
+    The returned pattern carries a leading ``(?d)`` (UNIX_LINES): Java's ``$``
+    and ``.`` otherwise treat ``\\r``, ``\\u0085``, ``\\u2028`` and
+    ``\\u2029`` as line terminators too, while Python's treat only
+    ``\\n`` (``^abc$`` would accept ``"abc\\r"``, ``^a.b$`` reject
+    ``"a\\rb"``). It may also carry ``(?U)`` so Java's
     ``\\d``/``\\w``/``\\b`` match Python's Unicode-aware classes.
     """
     if any(tok in pattern for tok in _PY_ONLY_TOKENS):
@@ -177,7 +183,7 @@ def java_safe_pattern(pattern: str) -> str | None:
         re.compile(python_pattern(pattern))
     except re.error:
         return None
-    out = pattern
+    out = "(?d)" + pattern
     if _CLASS_SHORTHAND.search(pattern):
         out = "(?U)" + out
     if _jvm_pattern_compiles(out) is False:

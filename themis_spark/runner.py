@@ -15,6 +15,15 @@ partition-granular and idempotently resumable:
    scale); each batch's outputs land via dynamic partition overwrite
    (idempotent replace, the Parquet stand-in for Iceberg
    overwritePartitions), then lineage rows commit;
+2a. rows past the Variant unroll depth (the residual, validated whole by
+   the Arrow validator) are handled per plan. If the main projection
+   already calls Python (an RE2/hash-set check or an ungated Arrow spec,
+   ``CompiledPlan.main_calls_python``), the residual is FOLDED into it.
+   Otherwise the main pass stays Python-free and its write job counts the
+   gated rows; the residual job runs only when that count is > 0 (else it
+   is SKIPPED) and APPENDS into the batch's violations directory after the
+   main overwrite, before the lineage commit. ``RunResult.residual_rows``
+   is that count, summed over batches, on either arm;
 3. a killed run re-executes at most one uncommitted batch; committed
    partitions are never re-validated (tested by tests/test_resume.py).
 
@@ -37,7 +46,7 @@ from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from themis_spark.operators import validate as V
@@ -107,6 +116,9 @@ class RunResult:
     stage_secs: dict = field(default_factory=dict)
     #: seconds this call spent in compile_plan (kept out of stage_secs)
     compile_s: float = 0.0
+    #: rows past the Variant unroll depth, which the Arrow validator
+    #: checked whole (the residual path), counted on the write job
+    residual_rows: int = 0
 
 
 def _lineage_table(spark: SparkSession, cfg: RunConfig) -> ParquetTable:
@@ -230,6 +242,12 @@ def _clean_stale_violation_batches(spark: SparkSession, cfg: RunConfig) -> list[
     return sorted(set(removed))
 
 
+def _per_partition_sums(part: Column, batch: list, value: Column) -> list[Column]:
+    """One conditional sum of ``value`` per batch partition, aliased
+    ``p<partition>`` — Observation aggregates (NULL when no row matched)."""
+    return [F.sum(F.when(part == str(p), value)).alias(f"p{p}") for p in batch]
+
+
 def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> RunResult:
     all_parts = table.list_partitions()
     done = completed_partitions(spark, cfg)
@@ -266,72 +284,92 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
 
     stage = {"validate_sink": 0.0, "stats": 0.0, "verdict_commit": 0.0,
              "constraints": 0.0}
-    total_rows = total_viol = 0
+    total_rows = total_viol = total_residual = 0
+    # where the deep-recursion residue (rows past the Variant unroll) is
+    # validated, chosen once per plan: FOLD it into the main projection
+    # when that projection already runs Python (the gated UDF joins the
+    # ArrowEvalPython node that runs anyway), else keep the main pass
+    # Python-free and run the residual job only for batches whose write
+    # job counted gated rows
+    gated = plan.residual_gate() is not None
+    fold = gated and plan.main_calls_python
     done_now: list = []
     for batch in batches:
         started = time.time()
         df = base.filter(F.col(table.partition_col).isin(batch))
         stats_cols = cfg.stats_columns or [cfg.key_col]
         # opt-in single-scan regime: per-partition stats ride the
-        # violations-write job as Observation aggregates
-        # (stats.fused_stats_aggs) instead of a second scan. See the
-        # RunConfig.fuse_stats docstring for the measured trade-off —
-        # the ≤64-partition gate bounds the conditional-agg expression
-        # count (same gate as the violation-count observation below).
+        # violations-write job as Observation aggregates instead of a
+        # second scan. See the RunConfig.fuse_stats docstring for the
+        # measured trade-off — the ≤64-partition gate bounds the
+        # conditional-agg expression count (same gate as the violation
+        # counts below).
         fused = (cfg.fuse_stats and len(batch) <= 64
                  and cfg.partition_col in df.columns)
         keep = [cfg.key_col, cfg.partition_col]
         if fused:
             keep += [c for c in stats_cols if c not in keep]
-        # defer_residual: the big scan runs 100% JVM-side; rows whose
-        # dynamic JSON recurses past the unroll depth are validated by a
-        # separate tiny Arrow job (residual_violations_df below) over a
-        # column-pruned scan — Python workers never spawn on clean data
-        annotated = V.annotate(df, plan, keep=keep, defer_residual=True)
-        stats_obs = decode_stats = None
+        annotated = V.annotate(df, plan, keep=keep, defer_residual=not fold)
+        # ONE Observation on the annotated frame carries every count the
+        # write job owes, so they cost zero extra jobs (no .persist(), no
+        # count re-run): per-partition sum(n_violations) — the rows the
+        # explode below writes — for batches of ≤64 partitions (the
+        # interpreted conditional-agg count stays bounded; bigger batches
+        # count the written sink instead), the gated-row count, and, when
+        # fused, the stats aggregates (stats.fused_stats_aggs), observed
+        # upstream of the explode so they see every source row once.
+        part_s = (F.col(cfg.partition_col).cast("string")
+                  if cfg.partition_col in annotated.columns else F.lit("0"))
+        aggs = []
+        if len(batch) <= 64:
+            aggs += _per_partition_sums(part_s, batch, F.col("n_violations"))
+        if gated:
+            aggs.append(F.sum("_residual_row").alias("residual_rows"))
+        decode_stats = None
         if fused:
-            from pyspark.sql import Observation
-
             from themis_spark.operators.stats import fused_stats_aggs
 
-            stats_obs = Observation()
             stat_aggs, decode_stats = fused_stats_aggs(
                 df, stats_cols, cfg.partition_col, batch,
                 cfg.hist_specs, cfg.run_id)
-            # observed upstream of the violations explode (and of the
-            # residual union), so stats see every source row exactly once
-            annotated = annotated.observe(stats_obs, *stat_aggs)
+            aggs += stat_aggs
+        obs = None
+        if aggs:
+            obs = Observation()
+            annotated = annotated.observe(obs, *aggs)
 
         # scan 1 (the only pass that runs the compiled validators):
         # violations write MAP-SIDE straight from the scan tasks into the
         # batch's sink directory — no shuffle barrier inside the validate
         # stage (cfg.cluster_violations opts back into clustering, see
-        # its docstring for the measured trade-off). No .persist()
-        # round-trip and no count re-run (round-1 advice): per-partition
-        # violation counts ride ON the write job itself via Observation
-        # (conditional sums — one per batch partition), so the counts
-        # cost zero extra jobs.
+        # its docstring for the measured trade-off).
         t0 = time.time()
         viol = V.violations_df(annotated, cfg.key_col, cfg.partition_col, cfg.run_id)
-        residual = V.residual_violations_df(df, plan, cfg.key_col,
-                                            cfg.partition_col, cfg.run_id)
-        if residual is not None:
-            viol = viol.unionByName(residual)
         if cfg.cluster_violations:
             viol = viol.repartition(F.col("partition_id"))
         batch_label = f"b{batch[0]}" if batch else "b_empty"
         viol = viol.withColumn("batch", F.lit(batch_label))
-        obs = None
-        if len(batch) <= 64:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            viol = viol.observe(obs, *[
-                F.sum(F.when(F.col("partition_id") == str(p), 1).otherwise(0))
-                .alias(f"p{p}")
-                for p in batch
-            ])
         viol_t.overwrite_partitions(viol)
+        got = obs.get if obs is not None else {}
+        n_residual = int(got.get("residual_rows") or 0)
+        viol_per_part = ({str(p): int(got[f"p{p}"] or 0) for p in batch}
+                         if len(batch) <= 64 else None)
+        if n_residual and not fold:
+            # the deferred residue: its own column-pruned job, appended
+            # into the same batch directory. A kill between the two writes
+            # leaves the batch uncommitted; its re-run's overwrite above
+            # clears the directory, so no row is counted twice.
+            res = V.residual_violations_df(df, plan, cfg.key_col,
+                                           cfg.partition_col, cfg.run_id)
+            res = res.withColumn("batch", F.lit(batch_label))
+            if viol_per_part is not None:
+                res_obs = Observation()
+                res = res.observe(res_obs, *_per_partition_sums(
+                    F.col("partition_id"), batch, F.lit(1)))
+            viol_t.append(res)
+            if viol_per_part is not None:
+                for p in batch:
+                    viol_per_part[str(p)] += int(res_obs.get[f"p{p}"] or 0)
         stage["validate_sink"] += time.time() - t0
 
         # stats: fused path decodes the Observation the write job already
@@ -339,7 +377,7 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
         # per-partition aggregation job (scan 2, pure codegen).
         t0 = time.time()
         if decode_stats is not None:
-            metrics_rows = decode_stats(stats_obs.get)
+            metrics_rows = decode_stats(got)
         else:
             metrics_rows = column_stats(df, stats_cols, cfg.partition_col,
                                         cfg.hist_specs, cfg.run_id).collect()
@@ -368,13 +406,10 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
             ], schema=_METRICS_ARROW)
             _overwrite_partition_local(metr_t.path, "batch", batch_label, tbl)
 
-        # violation counts came for free from the write job's Observation
-        # (fallback for huge batches: aggregate the written sink — parquet
-        # footer counts, still no cache of the exploded frame)
-        if obs is not None:
-            got = obs.get
-            viol_per_part = {str(p): int(got[f"p{p}"] or 0) for p in batch}
-        else:
+        # fallback for huge batches: aggregate the written sink (main and
+        # residual rows alike — parquet footer counts, still no cache of
+        # the exploded frame)
+        if viol_per_part is None:
             viol_per_part = {
                 str(r["partition_id"]): int(r["n"])
                 for r in viol_t.read(partitions=[batch_label])
@@ -392,6 +427,7 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
                 schema=_VERDICT_ARROW))
         total_rows += sum(rows_per_part.values())
         total_viol += sum(viol_per_part.values())
+        total_residual += n_residual
         # lineage commit LAST: a kill before this line leaves the batch
         # uncommitted and it re-runs idempotently (outputs are overwritten
         # per-partition, so the retry converges to the same bytes)
@@ -464,4 +500,5 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
         global_violations=global_viol,
         stage_secs={k: round(v, 3) for k, v in stage.items()},
         compile_s=round(compile_s, 3),
+        residual_rows=total_residual,
     )
