@@ -121,11 +121,10 @@ def q_kw_pattern_re2(spark, sf):
 
 
 def q_kw_enum_broadcast(spark, sf):
-    # round 5 (north star: "enum via broadcast hash sets"): a 15,000-
-    # member enum — far past the literal-isin threshold — compiles to
-    # the pyarrow.compute is_in probe against a closure-shipped hash
-    # set; membership is a parity formula, so the oracle restates it
-    # without the list
+    # north star: "enum via broadcast hash sets": a 15,000-member enum
+    # compiles to one native In, which Catalyst turns into an InSet (a
+    # hash set shipped with each task); membership is a parity formula,
+    # so the oracle restates it without the list
     from themis_spark import compile_plan
 
     members = [f"item_{i:05d}" for i in range(0, 30000, 2)]

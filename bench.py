@@ -102,7 +102,7 @@ HEADLINE = [
     # cache paths) and the header-walk metadata tier for every variant
     "mm_decode_webp", "mm_meta_webp",
     # round 5: the north-star batch-validator tiers — RE2 regex via
-    # pyarrow.compute and the broadcast-hash-set enum regime
+    # pyarrow.compute, and a 15,000-member enum as one native InSet
     "kw_pattern_re2", "kw_enum_broadcast",
     # round 4: BM25 ranked retrieval over corpus statistics
     "search_bm25",

@@ -1,11 +1,14 @@
-"""defaults projection, broadcast-set enum, apply_defaults."""
+"""defaults projection, enum membership, apply_defaults."""
 
+import json
+import math
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
-from themis_spark.plans.compiler import (
-    compile_plan, defaults_projection, semi_join_filter,
-)
-from themis_spark.plans.pyvalidator import apply_defaults
+from themis_spark.plans.compiler import compile_plan, defaults_projection
+from themis_spark.plans.pyvalidator import apply_defaults, compile_python_validator
 
 
 def test_defaults_projection_native(spark):
@@ -40,40 +43,6 @@ def test_apply_defaults_python():
     assert src == {"b": {}}  # input never mutated
 
 
-def test_semi_join_filter_broadcast(spark):
-    df = spark.createDataFrame([(i, f"k{i % 5}") for i in range(100)], "id long, k string")
-    allowed = spark.createDataFrame([("k0",), ("k1",)], "v string")
-    out = semi_join_filter(df, "k", allowed, "v")
-    assert out.count() == 40
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-
-
-def test_enum_broadcast_hash_set_regime(spark):
-    """Round-5 (BASELINE.json north star: 'enum via broadcast hash
-    sets'): enum sets above ENUM_LITERAL_MAX compile to a vectorized
-    pyarrow.compute is_in probe against a closure-shipped hash set —
-    same verdicts as the literal isin, NULL = pass, plan carries
-    ArrowEvalPython (vectorized) and no wrapper spec."""
-    from themis_spark.plans.vector_checks import ENUM_LITERAL_MAX
-
-    members = [f"m{i:06d}" for i in range(0, 2 * ENUM_LITERAL_MAX + 10, 2)]
-    schema = {"type": "object",
-              "properties": {"v": {"type": "string", "enum": members}}}
-    df = spark.createDataFrame(
-        [("m000002",), ("m000003",), ("m002048",), ("nope",), (None,)],
-        "v string")
-    plan = compile_plan(schema, df.schema)
-    assert not plan.arrow_specs
-    rows = {r["v"]: r["n"] for r in df.select(
-        "v", F.size(plan.violations_col()).alias("n")).collect()}
-    assert rows == {"m000002": 0, "m000003": 1, "m002048": 0,
-                    "nope": 1, None: 0}
-    pstr = df.select(plan.violations_col().alias("v")) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in pstr and "BatchEvalPython" not in pstr
-
-
 def test_enum_small_sets_stay_literal(spark):
     """At or below the threshold the plan must remain fully native (no
     Python stage at all) — the fast path is untouched."""
@@ -90,77 +59,145 @@ def test_enum_small_sets_stay_literal(spark):
     assert got == {"a": 0, "x": 1}
 
 
-def _max_isin_literals(plan) -> int:
-    """Longest literal list of any ``in(value, lit, ...)`` node in the
-    plan's columns (Spark prints an isin as that call form)."""
-    import re
-
-    text = " ".join(c._jc.toString() for c in
-                    [ch.predicate for ch in plan.checks] + plan.variant_arrays)
-    longest = 0
-    for m in re.finditer(r"\bin\(", text):
-        depth, args, quoted = 1, 1, False
-        for ch in text[m.end():]:
-            if ch == "'":
-                quoted = not quoted
-            elif quoted:
-                continue
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            elif ch == "," and depth == 1:
-                args += 1
-        longest = max(longest, args - 1)
-    return longest
+#: members that need escaping in SQL text or JSON, or are outside the BMP
+ODD = ["a'b", "c\\d", "e\x00f", "g\nh", "\U0001F600i"]
 
 
-def test_no_plan_inlines_an_enum_past_the_literal_limit(spark):
-    """ENUM_LITERAL_MAX bounds string enums in element lambdas as it does
-    at column level: an items / additionalItems / map-value enum past it
-    leaves the native tier (same verdicts) instead of inlining 1500
-    literals."""
-    from themis_spark.plans.vector_checks import ENUM_LITERAL_MAX
+def _strs(n):
+    return ODD + [f"m{i:05d}" for i in range(n - len(ODD))]
 
-    big = [f"m{i:05d}" for i in range(1500)]
-    small = big[:ENUM_LITERAL_MAX]
+
+def _doubles(n):
+    # 2**70 fits no long, no double holds 2**53 + 1 exactly, and NaN
+    # equals nothing in pyvalidator
+    return [i + 0.5 for i in range(n - 5)] + [7, 2 ** 70, 2 ** 53 + 1,
+                                              math.inf, math.nan]
+
+
+def _mixed(n):
+    return _strs(n - 5) + [4, 2.5, True, None, 1e300]
+
+
+def _typed(prop):
+    return lambda members: {"type": "object", "properties": prop(members)}
+
+
+def _at_container(kw, ip, sp):
+    """An element check reports once per keyword, at its container."""
+    return kw, re.match(r"\$\.\w+", ip).group(), sp
+
+
+#: accessor → (table DDL, schema of the members, member list of size n,
+#: rows as {column: value} where a missing column is SQL NULL, and the
+#: native tier's view of a pyvalidator triple where the two differ)
+ENUM_CASES = {
+    "string_column": (
+        "s string", _typed(lambda m: {"s": {"type": "string", "enum": m}}), _strs,
+        [{"s": v} for v in ODD + ["m01494", "m01495", "nope"]] + [{}], None),
+    "bigint_column": (
+        "n bigint", _typed(lambda m: {"n": {"enum": m}}),
+        lambda n: [2 * i for i in range(n)],
+        [{"n": 4}, {"n": 2998}, {"n": 5}, {"n": -2}, {"n": 2 ** 40}, {}], None),
+    "double_column": (
+        "x double", _typed(lambda m: {"x": {"type": "number", "enum": m}}), _doubles,
+        [{"x": 1.5}, {"x": 7.0}, {"x": 1.25}, {"x": float(2 ** 70)},
+         {"x": float(2 ** 53)}, {"x": math.inf}, {"x": math.nan}, {}], None),
+    "variant_property": (
+        "meta string",
+        _typed(lambda m: {"meta": {"type": "object",
+                                   "properties": {"host": {"enum": m}}}}),
+        _mixed,
+        [{"meta": json.dumps({"host": v})}
+         for v in ODD + ["m01489", "nope", 4, 4.0, 5, 2.5, True, False, 1, None, 1e300]]
+        + [{"meta": "{}"}, {}],
+        # a Variant schema path starts at the column's own subschema
+        lambda kw, ip, sp: (kw, ip, sp.replace("/properties/meta", "", 1))),
+    "items": (
+        "tags array<string>",
+        _typed(lambda m: {"tags": {"type": "array", "items": {"enum": m}}}), _strs,
+        [{"tags": ODD + ["m01494"]}, {"tags": ["m00001", "nope"]},
+         {"tags": ["m00001", None]}, {}], _at_container),
+    "additional_items": (
+        "tup array<string>",
+        _typed(lambda m: {"tup": {"type": "array", "items": [{"type": "string"}],
+                                  "additionalItems": {"enum": m}}}), _strs,
+        [{"tup": ["x", "m00002", "g\nh"]}, {"tup": ["x", "nope", "nope"]},
+         {"tup": ["nope"]}, {}], _at_container),
+    "map_values": (
+        "attrs map<string,string>",
+        _typed(lambda m: {"attrs": {"type": "object",
+                                    "properties": {"k": {"enum": m}},
+                                    "additionalProperties": {"enum": m}}}), _strs,
+        [{"attrs": {"k": "m00003", "j": "a'b"}}, {"attrs": {"k": "nope"}},
+         {"attrs": {"k": "m00003", "j": "nope"}}, {}],
+        # a failing undeclared value is one additionalProperties violation
+        lambda kw, ip, sp: ((kw, ip, sp) if ip == "$.attrs.k" else
+                            ("additionalProperties", "$.attrs",
+                             sp.removesuffix("/enum")))),
+    "root_anyof_branch": (
+        "tags array<string>",
+        lambda m: {"anyOf": [{"properties": {
+            "tags": {"type": "array", "items": {"enum": m}}}}]}, _strs,
+        [{"tags": ["m00001", "e\x00f"]}, {"tags": ["m00001", "nope"]}, {}], None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(ENUM_CASES))
+def test_enum_membership_is_one_native_in(spark, monkeypatch, case):
+    """Every schema-literal membership test compiles to one native ``In``
+    (``InSet`` past 10 members) on every accessor: the same violation
+    triples as pyvalidator for a 1,500-member enum, no Python in the
+    plan, and compile round trips that do not grow with the members."""
+    ddl, schema_of, members_of, rows, native_view = ENUM_CASES[case]
+    cols = [c.split()[0] for c in ddl.split(", ")]
     df = spark.createDataFrame(
-        [(["m00001", "m01499"], ["x", "m00002"], {"k": "m00003"}),
-         (["m00001", "nope"], ["x", "nope"], {"k": "nope"}),
-         (None, None, None)],
-        "tags array<string>, tup array<string>, attrs map<string,string>")
-
-    def schema(members):
-        return {"type": "object", "properties": {
-            "tags": {"type": "array", "items": {"type": "string", "enum": members}},
-            "tup": {"type": "array", "items": [{"type": "string"}],
-                    "additionalItems": {"enum": members}},
-            "attrs": {"type": "object",
-                      "additionalProperties": {"type": "string", "enum": members}},
-        }}
-
-    assert _max_isin_literals(compile_plan(schema(small), df.schema)) == ENUM_LITERAL_MAX
-    plan = compile_plan(schema(big), df.schema)
-    assert _max_isin_literals(plan) <= ENUM_LITERAL_MAX
-    got = [sorted(r["v"]) for r in df.select(F.transform(
-        plan.violations_col(), lambda v: v["keyword"]).alias("v")).collect()]
-    assert got == [[], ["enum", "enum", "enum"], []]
-
-
-def test_root_branch_keeps_an_enum_past_the_literal_limit(spark):
-    """A root anyOf branch has no Arrow fallback: an items enum past
-    ENUM_LITERAL_MAX there still compiles, as an inline isin."""
-    big = [f"m{i:05d}" for i in range(1500)]
-    schema = {"anyOf": [{"properties": {
-        "tags": {"type": "array", "items": {"enum": big}}}}]}
-    df = spark.createDataFrame(
-        [(["m00001", "m01499"],), (["m00001", "nope"],), (None,)],
-        "tags array<string>")
+        [(i, *(r.get(c) for c in cols)) for i, r in enumerate(rows)],
+        f"rid int, {ddl}")
+    schema = schema_of(members_of(1500))
     plan = compile_plan(schema, df.schema)
     assert not plan.arrow_specs
-    assert _max_isin_literals(plan) == len(big)
-    got = [sorted(r["v"]) for r in df.select(F.transform(
-        plan.violations_col(), lambda v: v["keyword"]).alias("v")).collect()]
-    assert got == [[], ["anyOf"], []]
+    annotated = plan.prepare(df).select(
+        "rid", F.explode(plan.violations_col()).alias("v"))
+    assert "EvalPython" not in annotated._jdf.queryExecution().executedPlan().toString()
+    got = {(r["rid"], r["v"]["keyword"], r["v"]["instance_path"], r["v"]["schema_path"])
+           for r in annotated.collect()}
+    validator = compile_python_validator(schema)
+    want = {(i, *(native_view or (lambda *t: t))(*v))
+            for i, r in enumerate(rows)
+            for v in validator.validate(
+                {c: json.loads(x) if c == "meta" else x for c, x in r.items()}, "$")}
+    assert got == want and want
+
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    calls = [0]
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        # py4j frees dead proxies ("m" commands) from a background thread
+        calls[0] += not command.startswith("m\n")
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+
+    def round_trips(n):
+        calls[0] = 0
+        compile_plan(schema_of(members_of(n)), df.schema)
+        return calls[0]
+
+    round_trips(30)  # warm-up
+    assert abs(round_trips(3000) - round_trips(30)) <= 8
+
+
+def test_out_of_range_integer_enum_member(spark):
+    """An integer member no bigint can hold is dropped at compile time:
+    it equals no value of the column."""
+    schema = {"type": "object", "properties": {"n": {"enum": [2 ** 70, 5]}}}
+    df = spark.createDataFrame([(5,), (6,)], "n bigint")
+    plan = compile_plan(schema, df.schema)
+    got = {(r["n"], v["keyword"], v["instance_path"], v["schema_path"])
+           for r in df.select("n", plan.violations_col().alias("vs")).collect()
+           for v in r["vs"]}
+    validator = compile_python_validator(schema)
+    want = {(n, v.keyword, v.instance_path, v.schema_path)
+            for n in (5, 6) for v in validator.validate({"n": n}, "$")}
+    assert got == want and len(want) == 1

@@ -277,9 +277,10 @@ def test_tier_is_recorded_at_compile_time(spark):
     assert {c.tier for c in native.checks} == {"native"}
     re2 = compile_plan({"properties": {"s": {"pattern": "(?P<x>a)"}}}, fields)
     assert re2.main_calls_python
+    # an enum of any size is one native In
     big_enum = compile_plan(
         {"properties": {"s": {"enum": [f"m{i}" for i in range(1500)]}}}, fields)
-    assert big_enum.main_calls_python
+    assert not big_enum.main_calls_python
     # a composed check inherits the tier of its parts
     nested = compile_plan({"properties": {"s": {"anyOf": [
         {"pattern": "(?P<x>a)"}, {"maxLength": 2}]}}}, fields)

@@ -36,12 +36,13 @@ still pass.
 
 from __future__ import annotations
 
-import contextvars
+import json
 import re
 from dataclasses import dataclass, field
 from functools import reduce
 from typing import Any, Callable
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -61,6 +62,7 @@ from themis_spark.plans.regex_triage import (
 )
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
 _NUMERIC = _INTEGRAL + (T.FloatType, T.DoubleType, T.DecimalType)
 _FRACTIONAL = (T.FloatType, T.DoubleType, T.DecimalType)
 _STRINGLIKE = (T.StringType, T.TimestampType, T.DateType)
@@ -98,10 +100,10 @@ class ColumnCheck:
     predicate: Column  # True/NULL = pass, False = violation
     detail: Column
     column: str
-    #: "native": the predicate runs inside the JVM; "arrow": it calls a
-    #: pandas UDF (RE2 pattern, hash-set enum), so a projection holding it
-    #: already runs Python workers. Checks composed from others inherit
-    #: "arrow" when any part has it (``_joint_tier``).
+    #: "native": the predicate runs inside the JVM; "arrow": it calls the
+    #: RE2 pattern's pandas UDF, so a projection holding it already runs
+    #: Python workers. Checks composed from others inherit "arrow" when
+    #: any part has it (``_joint_tier``).
     tier: str = "native"
 
 
@@ -277,17 +279,54 @@ def _detail(col: Column) -> Column:
 
 def _enum_members_for(members, dt: T.DataType) -> list:
     """Enum members comparable to values of this Spark type. Filtering by
-    the DRAFT-4 type family prevents ``isin`` cross-type casts from
+    the DRAFT-4 type family prevents ``In`` cross-type casts from
     matching what the spec says must not match (``"1"`` ≠ ``1``;
     ``true`` ≠ ``1``)."""
     if isinstance(dt, T.BooleanType):
         return [m for m in members if isinstance(m, bool)]
     if isinstance(dt, _NUMERIC):
-        return [m for m in members
+        nums = [m for m in members
                 if isinstance(m, (int, float)) and not isinstance(m, bool)]
+        bits = _INT_BITS.get(type(dt))
+        if bits:
+            # an integer outside the column's range equals none of its
+            # values, and as a literal it would overflow the column type
+            return [m for m in nums if not isinstance(m, int)
+                    or -(1 << bits - 1) <= m < 1 << bits - 1]
+        if isinstance(dt, (T.FloatType, T.DoubleType)):
+            # a double equals an integer only if it holds it exactly, and
+            # NaN equals nothing
+            return [float(m) for m in nums if _exact_double(m)]
+        return nums
     if isinstance(dt, _STRINGLIKE):
         return [m for m in members if isinstance(m, str)]
     return []
+
+
+def _exact_double(m) -> bool:
+    try:
+        return float(m) == m
+    except OverflowError:
+        return False
+
+
+def member_of(col: Column, members: list) -> Column:
+    """``col IN (members)`` as one native Catalyst ``In`` (optimized to
+    ``InSet``, a hash set shipped with each task, past 10 members). The
+    member list crosses py4j as one JSON string, so building the Column
+    costs a constant number of round trips where ``Column.isin`` costs
+    about four per member. Works on lambda variables too. An empty list
+    matches nothing."""
+    if not members:
+        return F.lit(False)
+    jvm = SparkContext._active_spark_context._jvm  # noqa: SLF001
+    jackson = jvm.com.fasterxml.jackson
+    # json.dumps writes a non-finite float as a bare NaN or Infinity
+    mapper = jackson.databind.ObjectMapper().configure(
+        getattr(jackson.core, "JsonParser$Feature").ALLOW_NON_NUMERIC_NUMBERS, True)
+    jlist = mapper.readValue(json.dumps(members),
+                             jvm.java.lang.Class.forName("java.util.List"))
+    return Column(col._jc.isInCollection(jlist))  # noqa: SLF001
 
 
 def _str_ops_col(col: Column, dt: T.DataType) -> Column:
@@ -358,12 +397,6 @@ _DATETIME_NATIVE_RE = (
 
 PredBuilder = Callable[[Column], Column]
 
-#: True while a root combinator/dependency branch compiles. A branch
-#: predicate has no Arrow fallback, so there an element enum past
-#: ENUM_LITERAL_MAX inlines its isin rather than fail the compile.
-_IN_ROOT_BRANCH = contextvars.ContextVar("_IN_ROOT_BRANCH", default=False)
-
-
 def _scalar_pred_builders(
     node: Any, dt: T.DataType, reg: SchemaRegistry, base: str,
     stack: tuple, spath: str,
@@ -416,21 +449,13 @@ def _scalar_pred_builders(
         if any(isinstance(m, (list, dict)) for m in members):
             raise _NotNative("non-scalar enum members need deep equality")
         scalars = _enum_members_for(members, dt)
-        if (len(scalars) > vector_checks.ENUM_LITERAL_MAX
-                and not _IN_ROOT_BRANCH.get()):
-            # same bound as the column-level enum: a longer literal isin
-            # costs seconds of driver-side planning per query, and an
-            # element lambda has no broadcast-hash-set form
-            raise _NotNative(f"enum of {len(scalars)} literals in an element schema")
         has_null = any(m is None for m in members)
 
         # draft-4: null matches enum only via an explicit null member;
         # non-null matches only same-type-family members
         def b_enum(v: Column, s=scalars, hn=has_null) -> Column:
-            nonnull_match = v.isin(s) if s else F.lit(False)
             return F.when(v.isNull(), F.lit(hn)).otherwise(
-                F.coalesce(nonnull_match, F.lit(False))
-            )
+                F.coalesce(member_of(v, s), F.lit(False)))
 
         out.append(("enum", f"{spath}/enum", b_enum))
 
@@ -622,19 +647,7 @@ def _compile_sub(
         handled.add("enum")
         if isinstance(dt, (T.ArrayType, T.StructType, T.MapType)):
             raise _NotNative("enum over complex type needs deep equality")
-        scalars = _enum_members_for(node["enum"], dt)
-        if (len(scalars) > vector_checks.ENUM_LITERAL_MAX
-                and isinstance(dt, T.StringType)
-                and all(isinstance(m, str) for m in scalars)):
-            # broadcast-hash-set regime (BASELINE.json north star): the
-            # member list ships once per executor and probes through an
-            # Arrow C++ hash index — a >10^3-literal isin list would
-            # bloat the plan and the generated code instead
-            member = vector_checks.broadcast_isin_predicate(scalars)
-            add("enum", null_pass | member(col), tier="arrow")
-        else:
-            add("enum",
-                null_pass | (col.isin(scalars) if scalars else F.lit(False)))
+        add("enum", null_pass | member_of(col, _enum_members_for(node["enum"], dt)))
 
     # ---- string keywords (vacuous on non-string types) ---------------------
     if "pattern" in node:
@@ -975,7 +988,7 @@ def _compile_map(col, node, dt: T.MapType, spath, ipath, colname,
         pat_list = [java_safe_pattern(rx) for rx in pat_specs]
 
         def _covered(k):  # MUST stay single-parameter (pyspark HOF arity)
-            p = k.isin(allowed_keys) if allowed_keys else F.lit(False)
+            p = member_of(k, allowed_keys)
             for rx in pat_list:
                 p = p | k.rlike(rx)
             return p
@@ -993,7 +1006,7 @@ def _compile_map(col, node, dt: T.MapType, spath, ipath, colname,
 
         def _extra_ok(e):  # MUST stay single-parameter (pyspark HOF arity)
             k, v = e.getField("key"), e.getField("value")
-            known = k.isin(ak) if ak else F.lit(False)
+            known = member_of(k, ak)
             for rx in pl:
                 known = known | k.rlike(rx)
             return F.when(known, F.lit(True)).otherwise(
@@ -1134,17 +1147,6 @@ def defaults_projection(schema: dict, df_columns: list[str]) -> list[Column]:
         else:
             out.append(F.col(name))
     return out
-
-
-def semi_join_filter(df, col: str, allowed_df, allowed_col: str,
-                     broadcast_allowed: bool = True):
-    """df rows whose `col` IS in the allowed set — broadcast left-semi
-    join (the enum-as-table regime for web-scale allowlists, SURVEY
-    2(a).2: enums too large for an isin literal list)."""
-    keys = allowed_df.select(F.col(allowed_col).alias("__allowed")).dropDuplicates(["__allowed"])
-    if broadcast_allowed:
-        keys = F.broadcast(keys)
-    return df.join(keys, df[col] == keys["__allowed"], "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -1341,7 +1343,6 @@ def _root_branch_checks(branch: Any, spath: str, fields: dict,
         if name not in fields:
             continue
         plan.columns_needed.add(name)
-        token = _IN_ROOT_BRANCH.set(True)
         try:
             out.extend(_compile_sub(F.col(name), sub, fields[name],
                                     f"{spath}/properties/{name}", f"$.{name}",
@@ -1349,8 +1350,6 @@ def _root_branch_checks(branch: Any, spath: str, fields: dict,
         except _NotNative as exc:
             raise UnsupportedSchemaError(
                 f"root branch property {name!r} at {spath}: {exc}") from exc
-        finally:
-            _IN_ROOT_BRANCH.reset(token)
     for k, dep in (branch.get("dependencies") or {}).items():
         trigger = F.col(k).isNotNull() if k in fields else F.lit(False)
         if not isinstance(dep, dict):

@@ -51,6 +51,7 @@ from functools import reduce
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from themis_spark.plans.compiler import member_of
 from themis_spark.plans.parser import SchemaRegistry
 from themis_spark.plans.regex_triage import java_safe_pattern
 
@@ -176,12 +177,12 @@ def try_compile_variant_native(
             bools = [m for m in members if isinstance(m, bool)]
             match = F.lit(False)
             if strs:
-                match = match | (is_str & sval.isin(strs))
+                match = match | (is_str & member_of(sval, strs))
             if nums:
-                match = match | (is_num & d.isin(nums))
+                match = match | (is_num & member_of(d, nums))
             if bools:
                 bv = F.try_variant_get(nd, "$", "boolean")
-                match = match | ((s == "BOOLEAN") & bv.isin(bools))
+                match = match | ((s == "BOOLEAN") & member_of(bv, bools))
             if any(m is None for m in members):
                 match = match | (s == "VOID")
             out.append(("enum", ~match, ipath, f"{spath}/enum"))

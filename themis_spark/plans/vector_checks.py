@@ -1,26 +1,20 @@
-"""Vectorized Arrow-compute check predicates — the north star's batch
-validator mechanisms spelled out: "regex via pyarrow.compute, enum via
-broadcast hash sets" (BASELINE.json).
+"""Vectorized Arrow-compute pattern predicate — the north star's "regex
+via pyarrow.compute" (BASELINE.json) batch mechanism.
 
-These are the MIDDLE tier between JVM-native Column expressions and the
-per-value Python validator closures:
+:func:`re2_pattern_predicate` is the MIDDLE tier between JVM-native
+Column expressions and the per-value Python validator closures: pattern
+evaluation through ``pyarrow.compute.match_substring_regex`` (RE2,
+vectorized C++ over the Arrow batch; regex_triage.re2_safe_pattern gates
+which patterns may take it with Python-equivalent semantics). Enum
+membership needs no such tier: ``compiler.member_of`` builds one native
+``In``, which Catalyst turns into ``InSet`` — the north star's
+"broadcast hash set", shipped with each task.
 
-* :func:`re2_pattern_predicate` — pattern evaluation through
-  ``pyarrow.compute.match_substring_regex`` (RE2, vectorized C++ over
-  the Arrow batch; regex_triage.re2_safe_pattern gates which patterns
-  may take it with Python-equivalent semantics).
-* :func:`broadcast_isin_predicate` — enum membership through
-  ``pyarrow.compute.is_in`` against a hash set built ONCE per executor
-  python worker from the closure-shipped member list (the broadcast-
-  hash-set regime for enum sets too large to inline as an ``isin``
-  literal list, where a 10^5-literal expression bloats the plan and
-  codegen).
-
-Both return plain ``Column -> Column`` factories producing a boolean
-``pandas_udf`` column, so they compose with the native checks inside
-``_compile_sub`` exactly like an ``rlike``/``isin`` predicate would —
-same violation assembly, same three-valued NULL convention (NULL in →
-NULL out → pass). They are only ever attached at plain-column contexts
+The predicate is a plain ``Column -> Column`` factory producing a boolean
+``pandas_udf`` column, so it composes with the native checks inside
+``_compile_sub`` exactly like an ``rlike`` predicate would — same
+violation assembly, same three-valued NULL convention (NULL in → NULL
+out → pass). It is only ever attached at plain-column contexts
 (top-level columns, struct fields) — never inside higher-order-function
 lambdas, where Spark forbids Python UDFs.
 """
@@ -30,10 +24,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-#: enum member-count threshold above which the compiler switches from a
-#: literal ``isin`` list to the broadcast-hash-set regime
-ENUM_LITERAL_MAX = 1024
 
 
 def re2_pattern_predicate(pattern: str):
@@ -49,36 +39,5 @@ def re2_pattern_predicate(pattern: str):
 
     def build(col: Column) -> Column:
         return _match(col)
-
-    return build
-
-
-def broadcast_isin_predicate(members: list[str]):
-    """``col -> boolean Column``: string-set membership via
-    ``pyarrow.compute.is_in``. The member list ships in the closure
-    (O(members) bytes once per executor — broadcast shape); the Arrow
-    value-set (a C++ hash index) is materialized once per python worker
-    and reused across batches. NULL propagates (NULL is never a member
-    of the value set here; the caller owes the draft-4 null-member
-    rule, same as the native ``isin`` path)."""
-    cell: dict = {}
-
-    @F.pandas_udf("boolean")
-    def _member(s: pd.Series) -> pd.Series:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        vs = cell.get("v")
-        if vs is None:
-            vs = cell["v"] = pa.array(members, type=pa.string())
-        arr = pa.Array.from_pandas(s, type=pa.string())
-        out = pc.is_in(arr, value_set=vs)
-        # is_in maps NULL input to false; restore NULL propagation so
-        # the three-valued convention matches rlike/isin
-        return pc.if_else(pc.is_null(arr),
-                          pa.nulls(len(arr), pa.bool_()), out).to_pandas()
-
-    def build(col: Column) -> Column:
-        return _member(col)
 
     return build

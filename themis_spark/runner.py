@@ -17,7 +17,7 @@ partition-granular and idempotently resumable:
    overwritePartitions), then lineage rows commit;
 2a. rows past the Variant unroll depth (the residual, validated whole by
    the Arrow validator) are handled per plan. If the main projection
-   already calls Python (an RE2/hash-set check or an ungated Arrow spec,
+   already calls Python (an RE2 pattern check or an ungated Arrow spec,
    ``CompiledPlan.main_calls_python``), the residual is FOLDED into it.
    Otherwise the main pass stays Python-free and its write job counts the
    gated rows; the residual job runs only when that count is > 0 (else it
@@ -79,17 +79,6 @@ class RunConfig:
     text_invariant_ref: DataFrame | None = None
     partitions_per_batch: int | None = None  # None = all remaining in one job
     max_batches: int | None = None  # tests: stop early to simulate a kill
-    #: True: repartition violations onto partition_id before the sink
-    #: write (fewest, biggest files — one per input partition). False
-    #: (default): violations write MAP-SIDE into the batch's directory,
-    #: straight from the scan tasks. A/B at 8M rows × both cluster sizes
-    #: measured the two within noise of each other (the exploded
-    #: violation set is ~2% of rows, so its clustering shuffle is tiny
-    #: either way); default False keeps the validate stage barrier-free,
-    #: True trades that for one-file-per-partition output — flip it when
-    #: downstream reads of the violations table matter more than write
-    #: latency. A 100 TB deployment can also compact offline.
-    cluster_violations: bool = False
     #: True: per-partition stats ride the violations-write job as
     #: Observation conditional aggregates — ZERO extra scans. Measured
     #: trade-off at 16M rows × 32 partitions × 4 stats columns: the
@@ -341,12 +330,10 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
         # scan 1 (the only pass that runs the compiled validators):
         # violations write MAP-SIDE straight from the scan tasks into the
         # batch's sink directory — no shuffle barrier inside the validate
-        # stage (cfg.cluster_violations opts back into clustering, see
-        # its docstring for the measured trade-off).
+        # stage. A/B at 8M rows measured clustering them onto
+        # partition_id first within noise (~2% of rows violate).
         t0 = time.time()
         viol = V.violations_df(annotated, cfg.key_col, cfg.partition_col, cfg.run_id)
-        if cfg.cluster_violations:
-            viol = viol.repartition(F.col("partition_id"))
         batch_label = f"b{batch[0]}" if batch else "b_empty"
         viol = viol.withColumn("batch", F.lit(batch_label))
         viol_t.overwrite_partitions(viol)
