@@ -69,48 +69,6 @@ def test_quantile_stats_exact_at_high_accuracy(spark):
         assert r["max_rank_error"] == pytest.approx(1001 / 100_000)
 
 
-def test_fused_stats_parity_with_column_stats(spark, tmpdir_path):
-    """The Observation-fused per-partition stats (riding the violations
-    write job — zero extra scans) must equal the standalone column_stats
-    aggregation cell-for-cell, including histograms."""
-    from themis_spark.runner import RunConfig, run_validation
-    from themis_spark.sources.pages import PAGES_SCHEMA_JSON, generate_pages
-    from themis_spark.sources.tableio import ParquetTable
-
-    pages = generate_pages(spark, 4000, n_partitions=4)
-    pages.write.mode("overwrite").partitionBy("part_id").parquet(f"{tmpdir_path}/fp")
-    table = ParquetTable(spark, f"{tmpdir_path}/fp", "part_id")
-    spec = [HistSpec("warc_ts", 1.3e9, 1.8e9, 10)]
-    cfg = RunConfig(schema=PAGES_SCHEMA_JSON, out_dir=f"{tmpdir_path}/fout",
-                    run_id="v", stats_columns=["url", "text", "warc_ts"],
-                    hist_specs=spec, fuse_stats=True)
-    run_validation(spark, table, cfg)
-
-    def cells(rows):
-        return {
-            (str(r["partition_id"]), r["column"]): (
-                r["cnt"], r["nulls"], r["min_v"], r["max_v"],
-                tuple(r["histogram"] or []))
-            for r in rows
-        }
-
-    fused = cells(
-        spark.read.parquet(f"{tmpdir_path}/fout/metrics")
-        .select("partition_id", "column", "cnt", "nulls", "min_v",
-                "max_v", "histogram").collect())
-    ref = cells(column_stats(table.read(), ["url", "text", "warc_ts"],
-                             "part_id", spec, "v").collect())
-    assert fused == ref and len(ref) == 12
-    # HLL sketches aren't byte-comparable (merge-order) but the
-    # estimates must agree
-    from themis_spark.operators.stats import distinct_estimate
-
-    m = spark.read.parquet(f"{tmpdir_path}/fout/metrics")
-    est = distinct_estimate(m, "url")
-    exact = table.read().select("url").distinct().count()
-    assert abs(est - exact) / exact < 0.05
-
-
 def test_exact_dedup_stream_drops_recrawls(spark, tmpdir_path):
     from themis_spark.sources.pages import generate_pages
     from themis_spark.streaming.dedup_stream import (

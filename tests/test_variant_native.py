@@ -6,6 +6,7 @@ gated Arrow residue."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -254,3 +255,41 @@ def test_deferred_residual_union_equals_inline(spark):
         for r in got_df.unionByName(res).collect()
     }
     assert got == want and got  # non-empty, identical
+
+
+#: json_deep's node shape: a cyclic ``child`` with four properties
+NODE_SCHEMA = {
+    "id": "docs",
+    "type": "object",
+    "properties": {"doc": {"$ref": "#/definitions/node"}},
+    "definitions": {
+        "node": {
+            "type": "object",
+            "required": ["id", "kind"],
+            "properties": {
+                "id": {"type": "integer", "minimum": 0, "maximum": 1000000},
+                "kind": {"pattern": "^[a-z]+"},
+                "tags": {"uniqueItems": True},
+                "child": {"$ref": "#/definitions/node"},
+            },
+        }
+    },
+}
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("fold", [True, False])
+def test_residual_gate_occurs_once_per_consumer(spark, fold):
+    """The deep guard gates a column's checks once, not once per check:
+    its frontier probe occurs once in each consumer of the annotated
+    plan — the violations gate, ``_residual_row`` and, when folded, the
+    gated UDF input — and nowhere else."""
+    from themis_spark.operators import validate as V
+
+    df = spark.createDataFrame([("u", '{"id": 1, "kind": "a"}')],
+                               "url string, doc string")
+    plan = compile_plan(NODE_SCHEMA, df.schema, variant_unroll_depth=3)
+    ann = V.annotate(df, plan, keep=["url"], defer_residual=not fold)
+    analyzed = ann._jdf.queryExecution().analyzed().toString()
+    probes = len(re.findall(r"\$\.child\.child\.child\.child(?![.\w])", analyzed))
+    assert probes == (3 if fold else 2), probes

@@ -117,94 +117,6 @@ def column_stats(
     )
 
 
-def fused_stats_aggs(
-    df: DataFrame,
-    columns: list[str],
-    partition_col: str,
-    parts: list,
-    hist_specs: list[HistSpec] | None,
-    run_id: str,
-    with_hll: bool = True,
-):
-    """Per-(partition, column) stats as OBSERVATION aggregates, so they
-    ride the violations-write job's scan instead of costing a second
-    pass over the table.
-
-    Spark's CollectMetrics node evaluates plain (non-distinct) aggregate
-    expressions per task and merges them on the driver — including
-    ``hll_sketch_agg`` binary state and conditional histogram sums
-    (verified live). Per-partition granularity is expressed as
-    ``when(partition_col = p, col)`` conditionals — |columns|×|parts|×~5
-    aggregate expressions, and CollectMetrics evaluates them INTERPRETED
-    per row, outside whole-stage codegen. Measured consequence (16M rows,
-    4 stats columns × 32 partitions = 640 exprs): ~+60 s at 4 cores,
-    MORE than the column-pruned codegen'd second scan it replaces
-    (~15 s). Hence this path is opt-in (RunConfig.fuse_stats) and worth
-    it only for small |columns|×|parts| products or when a second pass
-    over the table is prohibitively expensive (cold object storage).
-
-    Returns ``(aggs, decode)`` where ``decode(observation.get)`` yields
-    rows shaped exactly like :func:`column_stats` output (the runner's
-    metrics contract), so the two paths stay interchangeable."""
-    hist_by_col = {h.column: h for h in (hist_specs or [])}
-    part_s = F.col(partition_col).cast("string")
-    aggs: list[Column] = []
-    for ci, c in enumerate(columns):
-        field = df.schema[c].dataType
-        spec = hist_by_col.get(c)
-        for pi, p in enumerate(parts):
-            cond = part_s == str(p)
-            col = F.when(cond, F.col(c))
-            tag = f"s{ci}_{pi}"
-            aggs.append(F.count(col).alias(f"{tag}_cnt"))
-            aggs.append(
-                F.sum(F.when(cond & F.col(c).isNull(), 1).otherwise(0))
-                .alias(f"{tag}_nulls"))
-            aggs.append(F.min(col).cast("string").alias(f"{tag}_min"))
-            aggs.append(F.max(col).cast("string").alias(f"{tag}_max"))
-            if with_hll and isinstance(field, _HLL_OK):
-                aggs.append(F.hll_sketch_agg(col).alias(f"{tag}_hll"))
-            if spec is not None:
-                num = F.col(c).cast("double")  # timestamps → epoch secs
-                w = (spec.hi - spec.lo) / spec.nbins
-                bucket = F.when(num.isNull(), F.lit(None)).when(
-                    num < spec.lo, F.lit(0)
-                ).when(num >= spec.hi, F.lit(spec.nbins + 1)).otherwise(
-                    (F.floor((num - spec.lo) / F.lit(w)) + 1).cast("int"))
-                aggs.append(F.array(*[
-                    F.coalesce(
-                        F.sum(F.when(cond & (bucket == i), 1).otherwise(0)),
-                        F.lit(0),
-                    ).cast("long")
-                    for i in range(spec.nbins + 2)
-                ]).alias(f"{tag}_hist"))
-
-    def decode(got: dict) -> list[dict]:
-        rows = []
-        for ci, c in enumerate(columns):
-            spec = hist_by_col.get(c)
-            for pi, p in enumerate(parts):
-                tag = f"s{ci}_{pi}"
-                sk = got.get(f"{tag}_hll")
-                hist = got.get(f"{tag}_hist")
-                rows.append({
-                    "run_id": run_id,
-                    "partition_id": str(p),
-                    "column": c,
-                    "cnt": int(got[f"{tag}_cnt"]),
-                    "nulls": int(got[f"{tag}_nulls"] or 0),
-                    "min_v": got[f"{tag}_min"],
-                    "max_v": got[f"{tag}_max"],
-                    "hll_sketch": bytes(sk) if sk is not None else None,
-                    "histogram": list(hist) if hist is not None else None,
-                    "hist_lo": float(spec.lo) if spec else None,
-                    "hist_hi": float(spec.hi) if spec else None,
-                })
-        return rows
-
-    return aggs, decode
-
-
 def distinct_estimate(metrics: DataFrame, column: str) -> int:
     """Merge per-partition HLL sketches → one distinct estimate. Sketches
     are mergeable across partitions AND across resumed runs (they're

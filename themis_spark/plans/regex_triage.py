@@ -3,7 +3,7 @@
 Schema ``pattern`` strings are ECMA-262; the engine's ground truth
 (plans/pyvalidator.py) evaluates them with Python ``re`` (Unicode
 semantics); the native Column paths evaluate them with Java regex via
-``rlike``. The dialects diverge in two load-bearing ways (round-1 ADVICE):
+``rlike``. The dialects diverge in four load-bearing ways (round-1 ADVICE):
 
 1. Python/ECMA-valid syntax that Java rejects — e.g. ``(?P<g>ab)+`` —
    raises ``PatternSyntaxException`` on EXECUTORS at runtime, aborting
@@ -12,6 +12,9 @@ semantics); the native Column paths evaluate them with Java regex via
    Unicode in Python ``re`` — silent divergence on non-ASCII input.
 3. Java's ``$`` and ``.`` know five line terminators, Python's only
    ``\\n`` — aligned by the ``(?d)`` (UNIX_LINES) prefix.
+4. Inside a character class Java reads ``&&`` as intersection and a
+   nested ``[`` as union; Python reads both literally. Such patterns
+   never take the Java tier.
 
 ``java_safe_pattern`` is the compile-time bail-out both native paths
 share: it returns a Java pattern aligned with Python semantics for the
@@ -55,16 +58,18 @@ def python_pattern(pattern: str) -> str:
 def _jvm_pattern_compiles(pattern: str) -> bool | None:
     """Driver-side java.util.regex.Pattern.compile probe. Returns None
     when no JVM is reachable (plan built before a SparkSession exists) —
-    callers then rely on the token heuristics alone."""
-    try:
-        from pyspark.sql import SparkSession
+    callers then rely on the token heuristics alone. The JVM comes from
+    the active SparkContext: ``SparkSession.getActiveSession()`` is None
+    on a Python thread other than the session's."""
+    from pyspark import SparkContext
 
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return None
-        spark._jvm.java.util.regex.Pattern.compile(pattern)  # noqa: SLF001
+    sc = SparkContext._active_spark_context  # noqa: SLF001
+    if sc is None:
+        return None
+    try:
+        sc._jvm.java.util.regex.Pattern.compile(pattern)  # noqa: SLF001
         return True
-    except Exception:
+    except Exception:  # PySpark converts the Java exception to its own
         return False
 
 
@@ -85,6 +90,25 @@ _NUMERIC_BACKREF = re.compile(r"\\[1-9]")
 _MULTILINE_FLAG = re.compile(r"\(\?[a-zA-Z-]*m")
 
 
+def _tokens(pattern: str):
+    """Yield ``(i, token, in_class)`` for each token of a Python
+    pattern: an escape pair such as ``\\$`` or one character.
+    ``in_class`` says whether the token lies inside a character class:
+    the ``[`` that opens a class does not, the ``]`` that closes it
+    does. A ``]`` right after ``[`` or ``[^`` is a literal member, as in
+    Python."""
+    i, n, cls_start = 0, len(pattern), None
+    while i < n:
+        tok = pattern[i:i + 2] if pattern[i] == "\\" else pattern[i]
+        yield i, tok, cls_start is not None
+        if cls_start is not None:
+            if tok == "]" and i > cls_start:
+                cls_start = None
+        elif tok == "[":
+            cls_start = i + 1 + (pattern[i + 1:i + 2] == "^")
+        i += len(tok)
+
+
 def _translate_anchors(pattern: str) -> str | None:
     """RE2 spelling of Python's end anchors, or None when a ``$`` has no
     translation here.
@@ -94,35 +118,34 @@ def _translate_anchors(pattern: str) -> str | None:
     end: a ``$`` that ends the pattern or a top-level alternative
     becomes ``\\n?\\z`` (nothing follows it, so the verdict is the
     same); a ``$`` anywhere else, or under a multi-line flag, gives
-    None. Escape and class state are walked, so ``\\\\Z``, ``\\$`` and
-    ``[$]`` stay literal; a ``]`` right after ``[`` or ``[^`` is a
-    literal member, as in Python."""
+    None. Escape and class state are walked (:func:`_tokens`), so
+    ``\\\\Z``, ``\\$`` and ``[$]`` stay literal."""
     out: list[str] = []
-    i, n, depth, cls_start = 0, len(pattern), 0, None
-    while i < n:
-        c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            nxt = pattern[i + 1]
-            out.append("\\z" if nxt == "Z" else c + nxt)
-            i += 2
-            continue
-        if cls_start is not None:
-            if c == "]" and i > cls_start:
-                cls_start = None
-        elif c == "[":
-            cls_start = i + 1 + (pattern[i + 1:i + 2] == "^")
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "$":
-            if (depth or pattern[i + 1:i + 2] not in ("", "|")
-                    or _MULTILINE_FLAG.search(pattern)):
-                return None
-            c = "\\n?\\z"
-        out.append(c)
-        i += 1
+    depth = 0
+    for i, tok, in_class in _tokens(pattern):
+        if tok == "\\Z":
+            tok = "\\z"
+        elif not in_class:
+            if tok == "(":
+                depth += 1
+            elif tok == ")":
+                depth -= 1
+            elif tok == "$":
+                if (depth or pattern[i + 1:i + 2] not in ("", "|")
+                        or _MULTILINE_FLAG.search(pattern)):
+                    return None
+                tok = "\\n?\\z"
+        out.append(tok)
     return "".join(out)
+
+
+def _java_class_operators(pattern: str) -> bool:
+    """Does a character class of ``pattern`` hold ``&&`` or an unescaped
+    ``[``? Java reads them as class intersection and union (``[a&&b]``
+    matches nothing, ``[a[bc]]`` is one class); Python and RE2 read them
+    as literal members."""
+    return any(in_class and (tok == "[" or pattern.startswith("&&", i))
+               for i, tok, in_class in _tokens(pattern))
 
 
 def re2_safe_pattern(pattern: str) -> str | None:
@@ -136,7 +159,9 @@ def re2_safe_pattern(pattern: str) -> str | None:
     and the ``\\A``/``\\Z``/``$`` anchors (see
     :func:`_translate_anchors`). Rejected: backrefs, comments,
     lookaround, word boundaries, the ASCII-vs-Unicode class shorthands,
-    and a ``$`` that is not final. A final probe compiles the
+    a ``[:`` inside a class (RE2 reads ``[[:alpha:]]`` as a POSIX
+    class, Python as the members ``[:alph`` and a literal ``]``), and a
+    ``$`` that is not final. A final probe compiles the
     candidate through pyarrow.compute itself (authoritative — catches
     anything RE2 rejects that the token checks missed)."""
     if _CLASS_SHORTHAND.search(pattern):
@@ -144,6 +169,9 @@ def re2_safe_pattern(pattern: str) -> str | None:
     if any(tok in pattern for tok in _RE2_UNSUPPORTED):
         return None
     if _NUMERIC_BACKREF.search(pattern):
+        return None
+    if any(in_class and pattern.startswith("[:", i)
+           for i, _, in_class in _tokens(pattern)):
         return None
     try:
         # the Python ground truth must accept it in ITS dialect
@@ -182,6 +210,8 @@ def java_safe_pattern(pattern: str) -> str | None:
         # groups (Java-native spelling) stay on the native path
         re.compile(python_pattern(pattern))
     except re.error:
+        return None
+    if _java_class_operators(pattern):
         return None
     out = "(?d)" + pattern
     if _CLASS_SHORTHAND.search(pattern):

@@ -22,8 +22,11 @@ compiles the COMMON CASE natively instead:
   rare rows are routed, alone, through the Arrow validator (the UDF
   input is NULLed for shallow rows, so the Python side sees real work
   only for the residue);
-* native checks are gated OFF for deep rows so the two paths never
-  double-report.
+* the native checks of a column are gated OFF for deep rows by ONE
+  gate around their concatenation (``CASE WHEN deep THEN [] ELSE …``),
+  so the two paths never double-report. Gating each check instead
+  would copy the deep guard's probe tree into every check, and Spark
+  would analyze and plan each copy on every call.
 
 Reference parity: playlyfe/themis compiles cyclic $refs into mutually
 recursive generated JS functions (src/themis.js); data depth drives
@@ -82,7 +85,7 @@ class _Unsupported(Exception):
 class VariantNativePlan:
     """Result of a successful native compile of one JSON-string column."""
 
-    violations_array: Column          # array<violation struct>, deep-gated
+    violations_array: Column          # array<violation struct>, gated once
     deep_guard: Column | None         # rows needing the Arrow residue
     frontier_paths: list[str]         # variant paths beyond the unroll
 
@@ -486,11 +489,18 @@ def try_compile_variant_native(
 
     empty = F.array().cast(VIOLATION_ARRAY_TYPE)
     malformed = raw.isNotNull() & v.isNull()
-    parts = [F.when(malformed, F.array(_viol("type", root_ipath, f"{base_uri}#"))).otherwise(empty)]
-    for cond, viol in cond_checks:
-        gated = cond if deep is None else (cond & ~deep)
-        parts.append(F.when(gated, F.array(viol)).otherwise(empty))
-    out = parts[0] if len(parts) == 1 else F.concat(*parts)
+    out = F.when(malformed, F.array(_viol("type", root_ipath, f"{base_uri}#"))).otherwise(empty)
+    if cond_checks:
+        checks = F.concat(*[F.when(cond, F.array(viol)).otherwise(empty)
+                            for cond, viol in cond_checks])
+        # ONE residual gate over all checks of the column, not one per
+        # check: the frontier probes then occur once in this array
+        # instead of once per check (json_deep: 34 → 3 in the analyzed
+        # plan, a 4× smaller tree for every call to analyze and plan).
+        # Same verdicts: ``deep`` and every ``cond`` are never NULL.
+        if deep is not None:
+            checks = F.when(deep, empty).otherwise(checks)
+        out = F.concat(out, checks)
     return VariantNativePlan(out, deep, frontier)
 
 

@@ -14,7 +14,11 @@ partition-granular and idempotently resumable:
    partition — per-partition jobs would be a driver-side loop that can't
    scale); each batch's outputs land via dynamic partition overwrite
    (idempotent replace, the Parquet stand-in for Iceberg
-   overwritePartitions), then lineage rows commit;
+   overwritePartitions), then lineage rows commit. The verdicts' row and
+   violation counts per partition ride the write job's Observation
+   (batches of ≤64 partitions); a stats job runs only for the
+   ``stats_columns`` asked for, and a bigger batch takes its row counts
+   from that job and its violation counts from the written sink;
 2a. rows past the Variant unroll depth (the residual, validated whole by
    the Arrow validator) are handled per plan. If the main projection
    already calls Python (an RE2 pattern check or an ungated Arrow spec,
@@ -79,17 +83,6 @@ class RunConfig:
     text_invariant_ref: DataFrame | None = None
     partitions_per_batch: int | None = None  # None = all remaining in one job
     max_batches: int | None = None  # tests: stop early to simulate a kill
-    #: True: per-partition stats ride the violations-write job as
-    #: Observation conditional aggregates — ZERO extra scans. Measured
-    #: trade-off at 16M rows × 32 partitions × 4 stats columns: the
-    #: |cols|×|parts|×5 aggregate expressions evaluate INTERPRETED per
-    #: row inside CollectMetrics (~+60 s at 4 cores), costing far more
-    #: than the column-pruned, whole-stage-codegen'd second scan they
-    #: replace (~15 s). False (default): dedicated stats job. Flip on
-    #: only for few-partition batches / few stats columns, or where a
-    #: second pass over the table is prohibitively expensive (e.g.
-    #: remote object storage without a page cache).
-    fuse_stats: bool = False
 
 
 @dataclass
@@ -231,10 +224,12 @@ def _clean_stale_violation_batches(spark: SparkSession, cfg: RunConfig) -> list[
     return sorted(set(removed))
 
 
-def _per_partition_sums(part: Column, batch: list, value: Column) -> list[Column]:
+def _per_partition_sums(part: Column, batch: list, value: Column,
+                        tag: str = "p") -> list[Column]:
     """One conditional sum of ``value`` per batch partition, aliased
-    ``p<partition>`` — Observation aggregates (NULL when no row matched)."""
-    return [F.sum(F.when(part == str(p), value)).alias(f"p{p}") for p in batch]
+    ``<tag><partition>`` — Observation aggregates (NULL when no row
+    matched)."""
+    return [F.sum(F.when(part == str(p), value)).alias(f"{tag}{p}") for p in batch]
 
 
 def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> RunResult:
@@ -286,42 +281,28 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
     for batch in batches:
         started = time.time()
         df = base.filter(F.col(table.partition_col).isin(batch))
-        stats_cols = cfg.stats_columns or [cfg.key_col]
-        # opt-in single-scan regime: per-partition stats ride the
-        # violations-write job as Observation aggregates instead of a
-        # second scan. See the RunConfig.fuse_stats docstring for the
-        # measured trade-off — the ≤64-partition gate bounds the
-        # conditional-agg expression count (same gate as the violation
-        # counts below).
-        fused = (cfg.fuse_stats and len(batch) <= 64
-                 and cfg.partition_col in df.columns)
-        keep = [cfg.key_col, cfg.partition_col]
-        if fused:
-            keep += [c for c in stats_cols if c not in keep]
-        annotated = V.annotate(df, plan, keep=keep, defer_residual=not fold)
+        annotated = V.annotate(df, plan, keep=[cfg.key_col, cfg.partition_col],
+                               defer_residual=not fold)
         # ONE Observation on the annotated frame carries every count the
         # write job owes, so they cost zero extra jobs (no .persist(), no
-        # count re-run): per-partition sum(n_violations) — the rows the
-        # explode below writes — for batches of ≤64 partitions (the
+        # count re-run), observed upstream of the explode so they see
+        # every source row once. For batches of ≤64 partitions (the
         # interpreted conditional-agg count stays bounded; bigger batches
-        # count the written sink instead), the gated-row count, and, when
-        # fused, the stats aggregates (stats.fused_stats_aggs), observed
-        # upstream of the explode so they see every source row once.
+        # count the written sink instead): per-partition sum(n_violations)
+        # — the rows the explode below writes — and, when no stats job
+        # runs, the per-partition row counts the verdicts need. Plus the
+        # gated-row count.
+        observed = len(batch) <= 64
+        count_rows = observed and not cfg.stats_columns
         part_s = (F.col(cfg.partition_col).cast("string")
                   if cfg.partition_col in annotated.columns else F.lit("0"))
         aggs = []
-        if len(batch) <= 64:
+        if observed:
             aggs += _per_partition_sums(part_s, batch, F.col("n_violations"))
+        if count_rows:
+            aggs += _per_partition_sums(part_s, batch, F.lit(1), tag="r")
         if gated:
             aggs.append(F.sum("_residual_row").alias("residual_rows"))
-        decode_stats = None
-        if fused:
-            from themis_spark.operators.stats import fused_stats_aggs
-
-            stat_aggs, decode_stats = fused_stats_aggs(
-                df, stats_cols, cfg.partition_col, batch,
-                cfg.hist_specs, cfg.run_id)
-            aggs += stat_aggs
         obs = None
         if aggs:
             obs = Observation()
@@ -340,7 +321,7 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
         got = obs.get if obs is not None else {}
         n_residual = int(got.get("residual_rows") or 0)
         viol_per_part = ({str(p): int(got[f"p{p}"] or 0) for p in batch}
-                         if len(batch) <= 64 else None)
+                         if observed else None)
         if n_residual and not fold:
             # the deferred residue: its own column-pruned job, appended
             # into the same batch directory. A kill between the two writes
@@ -349,29 +330,32 @@ def run_validation(spark: SparkSession, table: ParquetTable, cfg: RunConfig) -> 
             res = V.residual_violations_df(df, plan, cfg.key_col,
                                            cfg.partition_col, cfg.run_id)
             res = res.withColumn("batch", F.lit(batch_label))
-            if viol_per_part is not None:
+            if observed:
                 res_obs = Observation()
                 res = res.observe(res_obs, *_per_partition_sums(
                     F.col("partition_id"), batch, F.lit(1)))
             viol_t.append(res)
-            if viol_per_part is not None:
+            if observed:
                 for p in batch:
                     viol_per_part[str(p)] += int(res_obs.get[f"p{p}"] or 0)
         stage["validate_sink"] += time.time() - t0
 
-        # stats: fused path decodes the Observation the write job already
-        # computed (zero extra scans); fallback path is the standalone
-        # per-partition aggregation job (scan 2, pure codegen).
+        # stats: the standalone per-partition aggregation job (scan 2,
+        # pure codegen), run only for the stats columns asked for or for
+        # a batch too big to count its rows on the write job. A partition
+        # with no rows stays out of the verdicts either way.
         t0 = time.time()
-        if decode_stats is not None:
-            metrics_rows = decode_stats(got)
+        if count_rows:
+            rows_per_part = {str(p): int(got[f"r{p}"]) for p in batch
+                             if got[f"r{p}"] is not None}
         else:
+            stats_cols = cfg.stats_columns or [cfg.key_col]
             metrics_rows = column_stats(df, stats_cols, cfg.partition_col,
                                         cfg.hist_specs, cfg.run_id).collect()
-        rows_per_part = {
-            r["partition_id"]: int(r["cnt"]) + int(r["nulls"])
-            for r in metrics_rows if r["column"] == stats_cols[0]
-        }
+            rows_per_part = {
+                r["partition_id"]: int(r["cnt"]) + int(r["nulls"])
+                for r in metrics_rows if r["column"] == stats_cols[0]
+            }
         stage["stats"] += time.time() - t0
 
         t0 = time.time()
