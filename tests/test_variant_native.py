@@ -191,8 +191,11 @@ def test_variant_native_combinators_match_python(spark):
     variant path (no Arrow spec) and agree with the Python ground truth
     triple for triple (round-1 verdict items 1-2)."""
     registry, root = parse_schema(COMBINATOR_META)
+    # an inline column subschema: paths run through the column's property,
+    # as pyvalidator over the whole row gives them
     validator = compile_python_validator(
-        COMBINATOR_META["properties"]["meta"], registry=registry, base_uri=root
+        COMBINATOR_META["properties"]["meta"], registry=registry, base_uri=root,
+        schema_path=f"{root}#/properties/meta",
     )
     expected = _expected(validator, COMBINATOR_DOCS)
 

@@ -7,6 +7,15 @@ playlyfe/themis src/themis.js); anything dynamic (nested JSON columns,
 cyclic $refs, unknown shapes) falls back to a vectorized Arrow batch
 validator built on plans/pyvalidator.py.
 
+ONE KEYWORD TABLE: ``_scalar_keywords`` is the only definition of the
+scalar keywords (type, enum, pattern, lengths, format, bounds,
+multipleOf, item counts) for every native tier. It reads the instance
+through an accessor: ``_TypedValue`` here, which answers from the Spark
+type at compile time, and ``variant_native._VariantValue``, which answers
+with Variant probes. Typed columns, struct fields, array elements and map
+values (``_compile_sub``) and Variant nodes (``variant_native.walk``) all
+emit their checks from it.
+
 FAIL-CLOSED CONTRACT (round-1 verdict item 1): ``compile_plan`` never
 silently drops a keyword. The native compiler (``_compile_sub``) either
 expresses EVERY keyword of a subschema or raises ``_NotNative``; the
@@ -16,30 +25,31 @@ caller then routes the whole column through one of two complete paths:
   (plans/variant_native.py) or the Arrow JSON validator;
 * any other typed column → an Arrow WRAPPER spec: the value is
   re-serialized per row via ``to_json(struct(col))`` and validated by the
-  compiled Python closure validator against ``{"properties": {col: sub}}``
-  — exact draft-4 semantics, correct (keyword, instance_path,
-  schema_path) triples, no silent under-validation.
+  compiled Python closure validator of the column's subschema — exact
+  draft-4 semantics, correct (keyword, instance_path, schema_path)
+  triples, no silent under-validation.
 
 Anything the engine cannot express even that way (root-level combinators
 whose branches exceed the native set) raises ``UnsupportedSchemaError``
 at compile time — a validator that silently passes invalid rows is worse
 than one that refuses to compile.
 
-Typed-table null contract (SURVEY.md §7.3): SQL NULL in a typed column
-means the JSON property is ABSENT. Hence `required` fails on NULL, while
-value keywords (pattern, enum, bounds, …) pass on NULL — draft-4 keywords
-constrain only values of the matching type. INSIDE typed arrays and map
-values, NULL instead models JSON null (``null_is_json`` contexts below):
-`type` checks fail on it (unless "null" is allowed) and value keywords
-still pass.
+Typed-table null contract (SURVEY.md §7.3), kept by the code that emits
+the checks, never by the table: SQL NULL in a typed column or struct
+field means the JSON property is ABSENT. Hence `required` fails on NULL,
+while every value keyword passes on it. INSIDE typed arrays and map
+values (``_compile_sub(json_null=True)``) NULL is JSON null instead:
+`type` and `enum` judge it (it passes only "null" and a null member),
+every other keyword passes it.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import re
-from dataclasses import dataclass, field
-from functools import reduce
+from dataclasses import dataclass, field, replace
+from functools import cache, cached_property, reduce
 from typing import Any, Callable
 
 from pyspark import SparkContext
@@ -53,6 +63,7 @@ from themis_spark.plans.pyvalidator import (
     BUILTIN_FORMATS,
     PyValidator,
     compile_python_validator,
+    join_path,
 )
 from themis_spark.plans import vector_checks
 from themis_spark.plans.regex_triage import (
@@ -70,13 +81,23 @@ _STRINGLIKE = (T.StringType, T.TimestampType, T.DateType)
 #: inert draft-4 annotations — never produce runtime checks
 _ANNOTATIONS = {"id", "title", "description", "definitions", "default"}
 
-#: keywords that, on a StringType column, flag the column as a DYNAMIC
-#: JSON document (json.loads interpretation) rather than a plain string
-_JSON_CONTAINER_KEYWORDS = {
+#: the keywords of the scalar keyword table (``_scalar_keywords``)
+SCALAR_KEYWORDS = frozenset({
+    "type", "enum", "pattern", "minLength", "maxLength", "format",
+    "minimum", "exclusiveMinimum", "maximum", "exclusiveMaximum",
+    "multipleOf", "minItems", "maxItems",
+})
+_COMBINATORS = {"allOf", "anyOf", "oneOf", "not"}
+#: keywords each tier compiles by how it holds an array / an object
+_ARRAY_KEYWORDS = {"items", "additionalItems", "uniqueItems"}
+_OBJECT_KEYWORDS = {
     "properties", "patternProperties", "additionalProperties",
     "required", "minProperties", "maxProperties", "dependencies",
-    "items", "additionalItems", "minItems", "maxItems", "uniqueItems",
 }
+
+#: keywords that, on a StringType column, flag the column as a DYNAMIC
+#: JSON document (json.loads interpretation) rather than a plain string
+_JSON_CONTAINER_KEYWORDS = _ARRAY_KEYWORDS | _OBJECT_KEYWORDS | {"minItems", "maxItems"}
 
 
 class UnsupportedSchemaError(Exception):
@@ -255,52 +276,34 @@ VIOLATION_STRUCT_TYPE = T.StructType(
 VIOLATION_ARRAY_TYPE = T.ArrayType(VIOLATION_STRUCT_TYPE)
 
 
-def _type_compatible(json_type: str, dt: T.DataType) -> bool:
-    if json_type == "string":
-        return isinstance(dt, _STRINGLIKE)
-    if json_type == "integer":
-        return isinstance(dt, _INTEGRAL)
-    if json_type == "number":
-        return isinstance(dt, _NUMERIC)
-    if json_type == "boolean":
-        return isinstance(dt, T.BooleanType)
-    if json_type == "array":
-        return isinstance(dt, T.ArrayType)
-    if json_type == "object":
-        return isinstance(dt, (T.StructType, T.MapType))
-    if json_type == "null":
-        return True  # SQL NULL models it
-    return False
+#: the Spark types whose values always have each JSON type
+_JSON_TYPES = {
+    "string": _STRINGLIKE, "integer": _INTEGRAL, "number": _NUMERIC,
+    "boolean": (T.BooleanType,), "array": (T.ArrayType,),
+    "object": (T.StructType, T.MapType),
+}
 
 
 def _detail(col: Column) -> Column:
     return F.substring(col.cast("string"), 1, 64)
 
 
-def _enum_members_for(members, dt: T.DataType) -> list:
-    """Enum members comparable to values of this Spark type. Filtering by
-    the DRAFT-4 type family prevents ``In`` cross-type casts from
-    matching what the spec says must not match (``"1"`` ≠ ``1``;
-    ``true`` ≠ ``1``)."""
-    if isinstance(dt, T.BooleanType):
-        return [m for m in members if isinstance(m, bool)]
-    if isinstance(dt, _NUMERIC):
-        nums = [m for m in members
-                if isinstance(m, (int, float)) and not isinstance(m, bool)]
-        bits = _INT_BITS.get(type(dt))
-        if bits:
-            # an integer outside the column's range equals none of its
-            # values, and as a literal it would overflow the column type
-            return [m for m in nums if not isinstance(m, int)
-                    or -(1 << bits - 1) <= m < 1 << bits - 1]
-        if isinstance(dt, (T.FloatType, T.DoubleType)):
-            # a double equals an integer only if it holds it exactly, and
-            # NaN equals nothing
-            return [float(m) for m in nums if _exact_double(m)]
-        return nums
-    if isinstance(dt, _STRINGLIKE):
-        return [m for m in members if isinstance(m, str)]
-    return []
+def _enum_numbers(nums: list, dt: T.DataType | None) -> list:
+    """The numeric enum members a value of Spark type ``dt`` can equal, as
+    literals of that type. Members of the other JSON types never come
+    here: ``In`` would cast across type families, and the spec says
+    ``"1"`` ≠ ``1`` and ``true`` ≠ ``1``."""
+    bits = _INT_BITS.get(type(dt))
+    if bits:
+        # an integer outside the column's range equals none of its
+        # values, and as a literal it would overflow the column type
+        return [m for m in nums if not isinstance(m, int)
+                or -(1 << bits - 1) <= m < 1 << bits - 1]
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        # a double equals an integer only if it holds it exactly, and
+        # NaN equals nothing
+        return [float(m) for m in nums if _exact_double(m)]
+    return nums
 
 
 def _exact_double(m) -> bool:
@@ -390,197 +393,209 @@ _DATETIME_NATIVE_RE = (
 
 
 # ---------------------------------------------------------------------------
-# scalar predicate BUILDERS — reusable Column→Column keyword predicates used
-# inside higher-order lambdas (array elements, map values) where the target
-# Column is a lambda variable and cannot be captured statically.
+# the scalar keyword table: one definition per keyword for every native tier
 # ---------------------------------------------------------------------------
 
-PredBuilder = Callable[[Column], Column]
+# A condition is a Column, or a Python bool when compile time decides it:
+# these fold the constants so that a guard which always holds emits nothing.
 
-def _scalar_pred_builders(
-    node: Any, dt: T.DataType, reg: SchemaRegistry, base: str,
-    stack: tuple, spath: str,
-) -> list[tuple[str, str, PredBuilder]]:
-    """(keyword, schema_path, builder) per keyword of a SCALAR subschema.
+def _and(a: Column | bool, b: Column | bool) -> Column | bool:
+    if a is False or b is False:
+        return False
+    if a is True:
+        return b
+    return a if b is True else a & b
 
-    Builder predicates use pass-semantics: NULL value (JSON null in these
-    contexts) passes every value keyword; only `type` rejects it (unless
-    "null" is allowed). Raises _NotNative for anything beyond scalar
-    keywords + combinators-of-scalars."""
-    if not isinstance(node, dict):
-        return []
-    if "$ref" in node:
-        sub, nb, canon = reg.resolve(node["$ref"], base)
-        if id(sub) in stack:
-            raise _NotNative("cyclic $ref in element schema")
-        return _scalar_pred_builders(sub, dt, reg, nb, stack + (id(sub),), canon)
 
-    out: list[tuple[str, str, PredBuilder]] = []
-    handled = set(_ANNOTATIONS)
-    is_str = isinstance(dt, _STRINGLIKE)
-    is_num = isinstance(dt, _NUMERIC)
+def _or(a: Column | bool, b: Column | bool) -> Column | bool:
+    if a is True or b is True:
+        return True
+    if a is False:
+        return b
+    return a if b is False else a | b
+
+
+def _not(a: Column | bool) -> Column | bool:
+    return (not a) if isinstance(a, bool) else ~a
+
+
+class _TypedValue:
+    """The table's accessor over a typed Spark value ``v`` of type ``dt``.
+    It answers from the Spark type at compile time, so a guard is a Python
+    constant. Where NULL is JSON null (``json_null``), ``v IS NOT NULL``
+    joins every guard but that of "null"; elsewhere a NULL value is absent
+    and the emitter passes it before any check."""
+
+    def __init__(self, v: Column, dt: T.DataType, json_null: bool):
+        self.v, self.dt, self.json_null = v, dt, json_null
+
+    @cached_property
+    def present(self) -> Column | bool:
+        return self.v.isNotNull() if self.json_null else True
+
+    @cached_property
+    def text(self) -> Column:
+        return _str_ops_col(self.v, self.dt)
+
+    def string(self, cast: bool = True) -> tuple:
+        """(guard, text). With ``cast`` a Timestamp or Date value reads as
+        its canonical text; without it only a StringType value counts."""
+        if isinstance(self.dt, _STRINGLIKE if cast else T.StringType):
+            return self.present, self.text
+        return False, None
+
+    def number(self) -> tuple:
+        """(guard, value, the value's Spark type)."""
+        if isinstance(self.dt, _NUMERIC):
+            return self.present, self.v, self.dt
+        return False, None, None
+
+    def boolean(self) -> tuple:
+        if isinstance(self.dt, T.BooleanType):
+            return self.present, self.v
+        return False, None
+
+    def array_size(self) -> tuple:
+        if isinstance(self.dt, T.ArrayType):
+            return self.present, F.size(self.v)
+        return False, None
+
+    def has_type(self, t: str) -> Column | bool:
+        if t == "null":
+            return self.v.isNull() if self.json_null else False
+        if isinstance(self.dt, _JSON_TYPES.get(t, ())):
+            return self.present
+        if t == "integer" and isinstance(self.dt, _FRACTIONAL):
+            # draft-4: 1.0 IS an integer — a fractional value can be one
+            return _and(self.present, self.v == F.floor(self.v))
+        return False
+
+
+def _scalar_keywords(node: dict, value) -> list[tuple[str, str, Column | bool, str]]:
+    """``(keyword, schema-path leaf, fail condition, tier)`` for each
+    scalar keyword of ``node``: the one definition of these keywords for
+    every native tier. ``value`` is the tier's accessor (``_TypedValue``
+    or ``variant_native._VariantValue``). It answers four questions: is it
+    a string and what is its text, is it a number (or boolean) and what is
+    its value, is it an array and what is its size, does it have JSON
+    type *t*. A fail condition holds only for a value that fails; a
+    keyword that cannot fail on this value yields nothing. The tier is
+    "native", or "arrow" for the RE2 pattern predicate, which calls
+    Python: the emitter decides where that may run. Raises _NotNative
+    for what no native tier expresses."""
+    out: list[tuple[str, str, Column | bool, str]] = []
+
+    def add(keyword: str, leaf: str, fail: Column | bool, tier: str = "native"):
+        if fail is not False:
+            out.append((keyword, leaf, fail, tier))
 
     if "type" in node:
-        handled.add("type")
         types = node["type"] if isinstance(node["type"], list) else [node["type"]]
-        compatible = any(_type_compatible(t, dt) and t != "null" for t in types)
-        null_ok = "null" in types
-        # draft-4: "integer" is runtime-satisfiable on fractional types
-        int_over_frac = (not compatible and "integer" in types
-                         and isinstance(dt, _FRACTIONAL))
-
-        def b_type(v: Column, c=compatible, n=null_ok, f=int_over_frac) -> Column:
-            if f:
-                base = v.isNotNull() & (v == F.floor(v))
-                return (v.isNull() | base) if n else base
-            if c and n:
-                return F.lit(True)
-            if c:
-                return v.isNotNull()
-            if n:
-                return v.isNull()
-            return F.lit(False)
-
-        out.append(("type", f"{spath}/type", b_type))
+        add("type", "type", _not(reduce(_or, map(value.has_type, types), False)))
 
     if "enum" in node:
-        handled.add("enum")
         members = node["enum"]
         if any(isinstance(m, (list, dict)) for m in members):
             raise _NotNative("non-scalar enum members need deep equality")
-        scalars = _enum_members_for(members, dt)
-        has_null = any(m is None for m in members)
-
-        # draft-4: null matches enum only via an explicit null member;
-        # non-null matches only same-type-family members
-        def b_enum(v: Column, s=scalars, hn=has_null) -> Column:
-            return F.when(v.isNull(), F.lit(hn)).otherwise(
-                F.coalesce(member_of(v, s), F.lit(False)))
-
-        out.append(("enum", f"{spath}/enum", b_enum))
+        strs = [m for m in members if isinstance(m, str)]
+        nums = [m for m in members
+                if isinstance(m, (int, float)) and not isinstance(m, bool)]
+        bools = [m for m in members if isinstance(m, bool)]
+        match = False
+        if strs:
+            match = _or(match, _member(value.string(), strs))
+        if nums:
+            guard, num, dt = value.number()
+            match = _or(match, _member((guard, num), _enum_numbers(nums, dt)))
+        if bools:
+            match = _or(match, _member(value.boolean(), bools))
+        if any(m is None for m in members):
+            match = _or(match, value.has_type("null"))
+        add("enum", "enum", _not(match))
 
     if "pattern" in node:
-        handled.add("pattern")
-        if is_str:
+        guard, text = value.string()
+        if guard is not False:
             jp = java_safe_pattern(node["pattern"])
-            if jp is None:
-                raise _NotNative(f"pattern dialect: {node['pattern']!r}")
-            out.append(("pattern", f"{spath}/pattern",
-                        lambda v, p=jp: v.isNull() | _str_ops_col(v, dt).rlike(p)))
-    if "minLength" in node:
-        handled.add("minLength")
-        if is_str:
-            out.append(("minLength", f"{spath}/minLength",
-                        lambda v, n=node["minLength"]:
-                        v.isNull() | (F.length(_str_ops_col(v, dt)) >= n)))
-    if "maxLength" in node:
-        handled.add("maxLength")
-        if is_str:
-            out.append(("maxLength", f"{spath}/maxLength",
-                        lambda v, n=node["maxLength"]:
-                        v.isNull() | (F.length(_str_ops_col(v, dt)) <= n)))
-
-    if "minimum" in node:
-        handled.update({"minimum", "exclusiveMinimum"})
-        if is_num:
-            excl = bool(node.get("exclusiveMinimum", False))
-            kw = "exclusiveMinimum" if excl else "minimum"
-            m = node["minimum"]
-            out.append((kw, f"{spath}/minimum",
-                        lambda v, m=m, e=excl: v.isNull() | ((v > m) if e else (v >= m))))
-    elif "exclusiveMinimum" in node:
-        handled.add("exclusiveMinimum")  # modifier without bound: inert
-    if "maximum" in node:
-        handled.update({"maximum", "exclusiveMaximum"})
-        if is_num:
-            excl = bool(node.get("exclusiveMaximum", False))
-            kw = "exclusiveMaximum" if excl else "maximum"
-            m = node["maximum"]
-            out.append((kw, f"{spath}/maximum",
-                        lambda v, m=m, e=excl: v.isNull() | ((v < m) if e else (v <= m))))
-    elif "exclusiveMaximum" in node:
-        handled.add("exclusiveMaximum")
-
-    if "multipleOf" in node:
-        handled.add("multipleOf")
-        if is_num:
-            n = node["multipleOf"]
-            if isinstance(n, int) and isinstance(dt, _INTEGRAL):
-                out.append(("multipleOf", f"{spath}/multipleOf",
-                            lambda v, n=n: v.isNull() | (F.pmod(v, F.lit(n)) == 0)))
+            if jp is not None:
+                add("pattern", "pattern", _and(guard, ~text.rlike(jp)))
             else:
-                scale = max(len(str(n).split(".")[-1]) if "." in str(n) else 0, 6)
-                dec = T.DecimalType(38, scale + 6)
-                out.append(("multipleOf", f"{spath}/multipleOf",
-                            lambda v, n=n, d=dec: v.isNull()
-                            | (F.pmod(v.cast(d), F.lit(n).cast(d)) == 0)))
-
+                # middle tier (BASELINE.json north star: "regex via
+                # pyarrow.compute"): Java-incompatible but RE2-safe
+                # patterns evaluate vectorized in Arrow C++ — only the
+                # residue (backrefs, lookaround, unicode shorthands)
+                # falls through to the per-value Python path
+                r2 = re2_safe_pattern(node["pattern"])
+                if r2 is None:
+                    raise _NotNative(f"pattern dialect: {node['pattern']!r}")
+                matcher = vector_checks.re2_pattern_predicate(r2)
+                add("pattern", "pattern", _and(guard, ~matcher(text)), "arrow")
+    for kw, too_far in (("minLength", operator.lt), ("maxLength", operator.gt)):
+        if kw in node:
+            guard, text = value.string()
+            if guard is not False:
+                add(kw, kw, _and(guard, too_far(F.length(text), node[kw])))
     if "format" in node:
-        handled.add("format")
-        if isinstance(dt, T.StringType):
-            fmt = node["format"]
-            if fmt in _GLOBAL_FORMATS:
-                raise _NotNative(f"custom format {fmt!r} runs on the Arrow path")
-            if fmt == "date-time":
-                out.append(("format", f"{spath}/format",
-                            lambda v: v.isNull() | (
-                                v.rlike(_DATETIME_NATIVE_RE)
-                                & F.try_to_timestamp(v).isNotNull())))
-            elif fmt in _FORMAT_REGEX:
-                out.append(("format", f"{spath}/format",
-                            lambda v, r=_FORMAT_REGEX[fmt]: v.isNull() | v.rlike(r)))
-            elif fmt in BUILTIN_FORMATS:
-                raise _NotNative(f"builtin format {fmt!r} has no native regex")
-            # unknown format: draft-4 SHOULD → ignored (same as pyvalidator)
+        # a real string only: a Timestamp or Date read as text is none
+        guard, text = value.string(cast=False)
+        if guard is not False:
+            add("format", "format", _and(guard, _not(_format_ok(node["format"], text))))
 
-    # combinators of scalars compose in builder space
-    if "allOf" in node:
-        handled.add("allOf")
-        for i, b in enumerate(node["allOf"]):
-            out.extend(_scalar_pred_builders(b, dt, reg, base, stack, f"{spath}/allOf/{i}"))
-    if "anyOf" in node:
-        handled.add("anyOf")
-        branches = [
-            _scalar_valid_builder(b, dt, reg, base, stack, f"{spath}/anyOf/{i}")
-            for i, b in enumerate(node["anyOf"])
-        ]
-        out.append(("anyOf", f"{spath}/anyOf",
-                    lambda v, bs=branches: _or_all([F.coalesce(f(v), F.lit(True)) for f in bs])))
-    if "oneOf" in node:
-        handled.add("oneOf")
-        branches = [
-            _scalar_valid_builder(b, dt, reg, base, stack, f"{spath}/oneOf/{i}")
-            for i, b in enumerate(node["oneOf"])
-        ]
-        out.append(("oneOf", f"{spath}/oneOf",
-                    lambda v, bs=branches: sum(
-                        (F.coalesce(f(v), F.lit(True)).cast("int") for f in bs),
-                        F.lit(0)) == 1))
-    if "not" in node:
-        handled.add("not")
-        inner = _scalar_valid_builder(node["not"], dt, reg, base, stack, f"{spath}/not")
-        out.append(("not", f"{spath}/not",
-                    lambda v, f=inner: ~F.coalesce(f(v), F.lit(True))))
+    for bound, excl_kw, below, at_or_below in (
+            ("minimum", "exclusiveMinimum", operator.lt, operator.le),
+            ("maximum", "exclusiveMaximum", operator.gt, operator.ge)):
+        # an exclusive modifier without its bound is inert
+        if bound in node:
+            guard, num, _ = value.number()
+            if guard is not False:
+                excl = bool(node.get(excl_kw, False))
+                add(excl_kw if excl else bound, bound,
+                    _and(guard, (at_or_below if excl else below)(num, node[bound])))
+    if "multipleOf" in node:
+        guard, num, dt = value.number()
+        if guard is not False:
+            add("multipleOf", "multipleOf",
+                _and(guard, _not_multiple(num, dt, node["multipleOf"])))
 
-    # object/array keywords are vacuous on genuinely scalar types (the
-    # value can never be an object/array) but NOT on string columns that
-    # might hold JSON — callers decide that before reaching here.
-    if not isinstance(dt, (T.ArrayType, T.StructType, T.MapType, T.StringType)):
-        handled |= _JSON_CONTAINER_KEYWORDS
-
-    extra = set(node) - handled
-    if extra:
-        raise _NotNative(f"keywords {sorted(extra)} on {dt.simpleString()}")
+    for kw, too_far in (("minItems", operator.lt), ("maxItems", operator.gt)):
+        if kw in node:
+            guard, size = value.array_size()
+            if guard is not False:
+                add(kw, kw, _and(guard, too_far(size, node[kw])))
     return out
 
 
-def _scalar_valid_builder(node, dt, reg, base, stack, spath) -> PredBuilder:
-    builders = _scalar_pred_builders(node, dt, reg, base, stack, spath)
+def _member(answer: tuple, members: list) -> Column | bool:
+    """``guard AND value IN members`` for an accessor's (guard, value)."""
+    guard, v = answer
+    if guard is False or not members:
+        return False
+    return _and(guard, member_of(v, members))
 
-    def valid(v: Column) -> Column:
-        return _and_all([F.coalesce(fn(v), F.lit(True)) for _, _, fn in builders])
 
-    return valid
+def _format_ok(fmt: str, text: Column) -> Column | bool:
+    """A string's native format check. An unknown format passes (draft-4
+    SHOULD: ignored, as in pyvalidator)."""
+    if fmt in _GLOBAL_FORMATS:
+        raise _NotNative(f"custom format {fmt!r} runs on the Arrow path")
+    if fmt == "date-time":
+        return text.rlike(_DATETIME_NATIVE_RE) & F.try_to_timestamp(text).isNotNull()
+    if fmt in _FORMAT_REGEX:
+        return text.rlike(_FORMAT_REGEX[fmt])
+    if fmt in BUILTIN_FORMATS:
+        raise _NotNative(f"builtin format {fmt!r} has no native regex")
+    return True
+
+
+def _not_multiple(num: Column, dt: T.DataType, n) -> Column:
+    if isinstance(n, int) and isinstance(dt, _INTEGRAL):
+        return F.pmod(num, F.lit(n)) != 0
+    # exact decimal modulus defeats binary-float noise. A value the
+    # decimal cannot hold (try_cast gives NULL) is no multiple, as in
+    # pyvalidator, whose Decimal arithmetic overflows on it
+    scale = max(len(str(n).split(".")[-1]) if "." in str(n) else 0, 6)
+    dec = T.DecimalType(38, scale + 6)
+    return F.coalesce(F.pmod(num.try_cast(dec), F.lit(n).cast(dec)) != 0, F.lit(True))
 
 
 # ---------------------------------------------------------------------------
@@ -598,13 +613,17 @@ def _compile_sub(
     reg: SchemaRegistry,
     base: str,
     stack: tuple = (),
+    json_null: bool = False,
 ) -> list[ColumnCheck]:
     """Compile ``node`` applied to the value ``col`` of Spark type ``dt``.
 
     COMPLETE or raises _NotNative — never drops a keyword (fail-closed).
-    NULL here means ABSENT (top-level columns / struct fields); array
-    elements and map values go through _scalar_pred_builders where NULL
-    means JSON null."""
+    The null contract is the caller's. By default NULL means ABSENT
+    (columns, struct fields) and every check passes on it. With
+    ``json_null`` (array elements, map values) NULL is JSON null, which
+    the table's accessor hands to `type` and `enum`; the value may then
+    be a lambda variable, so only the scalar keywords and the
+    combinators compile, all on the native tier."""
     if not isinstance(node, dict) or not node:
         return []
     if "$ref" in node:
@@ -613,249 +632,122 @@ def _compile_sub(
         if id(sub) in stack:
             raise _NotNative("cyclic $ref on typed column")
         return _compile_sub(col, sub, dt, canon, ipath, colname, reg, nb,
-                            stack + (id(sub),))
+                            stack + (id(sub),), json_null)
 
-    out: list[ColumnCheck] = []
-    handled = set(_ANNOTATIONS)
-    null_pass = col.isNull()  # absent value: value keywords pass
-    is_str = isinstance(dt, _STRINGLIKE)
-    is_num = isinstance(dt, _NUMERIC)
-
-    def add(keyword: str, pred: Column, leaf: str | None = None,
-            ip: str | None = None, detail: Column | None = None,
-            tier: str = "native") -> None:
-        out.append(ColumnCheck(
-            keyword, ip or ipath, f"{spath}/{leaf or keyword}", pred,
-            detail if detail is not None else _detail(col), colname, tier))
-
-    # ---- type ------------------------------------------------------------
-    if "type" in node:
-        handled.add("type")
-        types = node["type"] if isinstance(node["type"], list) else [node["type"]]
-        compatible = any(_type_compatible(t, dt) for t in types)
-        if not compatible:
-            if "integer" in types and isinstance(dt, _FRACTIONAL):
-                # draft-4: 1.0 IS an integer — a fractional column can
-                # satisfy "integer" at runtime (fraction-free values)
-                add("type", null_pass | (col == F.floor(col)))
-            else:
-                add("type", null_pass)  # every present value violates
-        # otherwise satisfied at schema level — zero runtime cost
-
-    # ---- enum (scalar members; complex types need deep equality) ----------
-    if "enum" in node:
-        handled.add("enum")
-        if isinstance(dt, (T.ArrayType, T.StructType, T.MapType)):
-            raise _NotNative("enum over complex type needs deep equality")
-        add("enum", null_pass | member_of(col, _enum_members_for(node["enum"], dt)))
-
-    # ---- string keywords (vacuous on non-string types) ---------------------
-    if "pattern" in node:
-        handled.add("pattern")
-        if is_str:
-            jp = java_safe_pattern(node["pattern"])
-            if jp is not None:
-                add("pattern", null_pass | _str_ops_col(col, dt).rlike(jp))
-            else:
-                # middle tier (BASELINE.json north star: "regex via
-                # pyarrow.compute"): Java-incompatible but RE2-safe
-                # patterns evaluate vectorized in Arrow C++ — only the
-                # residue (backrefs, lookaround, unicode shorthands)
-                # falls through to the per-value Python path
-                r2 = re2_safe_pattern(node["pattern"])
-                if r2 is None:
-                    raise _NotNative(f"pattern dialect: {node['pattern']!r}")
-                matcher = vector_checks.re2_pattern_predicate(r2)
-                add("pattern", null_pass | matcher(_str_ops_col(col, dt)),
-                    tier="arrow")
-    if "minLength" in node:
-        handled.add("minLength")
-        if is_str:
-            add("minLength",
-                null_pass | (F.length(_str_ops_col(col, dt)) >= node["minLength"]))
-    if "maxLength" in node:
-        handled.add("maxLength")
-        if is_str:
-            add("maxLength",
-                null_pass | (F.length(_str_ops_col(col, dt)) <= node["maxLength"]))
-    if "format" in node:
-        handled.add("format")
-        if isinstance(dt, T.StringType):
-            fmt = node["format"]
-            if fmt in _GLOBAL_FORMATS:
-                raise _NotNative(f"custom format {fmt!r} runs on the Arrow path")
-            if fmt == "date-time":
-                add("format", null_pass | (col.rlike(_DATETIME_NATIVE_RE)
-                                           & F.try_to_timestamp(col).isNotNull()))
-            elif fmt in _FORMAT_REGEX:
-                add("format", null_pass | col.rlike(_FORMAT_REGEX[fmt]))
-            elif fmt in BUILTIN_FORMATS:
-                raise _NotNative(f"builtin format {fmt!r} has no native regex")
-            # unknown format name: ignored, matching pyvalidator
-
-    # ---- numeric keywords (vacuous on non-numeric types) -------------------
-    if "minimum" in node:
-        handled.update({"minimum", "exclusiveMinimum"})
-        if is_num:
-            excl = bool(node.get("exclusiveMinimum", False))
-            pred = (col > node["minimum"]) if excl else (col >= node["minimum"])
-            add("exclusiveMinimum" if excl else "minimum",
-                null_pass | pred, leaf="minimum")
-    elif "exclusiveMinimum" in node:
-        handled.add("exclusiveMinimum")
-    if "maximum" in node:
-        handled.update({"maximum", "exclusiveMaximum"})
-        if is_num:
-            excl = bool(node.get("exclusiveMaximum", False))
-            pred = (col < node["maximum"]) if excl else (col <= node["maximum"])
-            add("exclusiveMaximum" if excl else "maximum",
-                null_pass | pred, leaf="maximum")
-    elif "exclusiveMaximum" in node:
-        handled.add("exclusiveMaximum")
-    if "multipleOf" in node:
-        handled.add("multipleOf")
-        if is_num:
-            n = node["multipleOf"]
-            if isinstance(n, int) and isinstance(dt, _INTEGRAL):
-                pred = F.pmod(col, F.lit(n)) == 0
-            else:
-                # exact decimal modulus defeats binary-float noise
-                scale = max(len(str(n).split(".")[-1]) if "." in str(n) else 0, 6)
-                dec = T.DecimalType(38, scale + 6)
-                pred = F.pmod(col.cast(dec), F.lit(n).cast(dec)) == 0
-            add("multipleOf", null_pass | pred)
-
-    # ---- array keywords ----------------------------------------------------
-    if isinstance(dt, T.ArrayType):
-        el_dt = dt.elementType
-        if "minItems" in node:
-            handled.add("minItems")
-            add("minItems", null_pass | (F.size(col) >= node["minItems"]))
-        if "maxItems" in node:
-            handled.add("maxItems")
-            add("maxItems", null_pass | (F.size(col) <= node["maxItems"]))
-        if "uniqueItems" in node:
-            handled.add("uniqueItems")
-            if node["uniqueItems"] is True:
-                add("uniqueItems",
-                    null_pass | (F.size(F.array_distinct(col)) == F.size(col)))
-        items = node.get("items")
-        if isinstance(items, dict):
-            handled.update({"items", "additionalItems"})  # additionalItems inert
-            builders = _scalar_pred_builders(items, el_dt, reg, base, stack,
-                                             f"{spath}/items")
-            for kw, sp, fn in builders:
-                # one violation per array when ANY element fails this
-                # keyword; per-index paths are static only on the tuple
-                # form — the array form reports at the array path.
-                pred = null_pass | _forall_ok(col, fn)
-                out.append(ColumnCheck(kw, ipath, sp, pred, _detail(col), colname))
-        elif isinstance(items, list):
-            handled.update({"items", "additionalItems"})
-            n_pos = len(items)
-            for i, isub in enumerate(items):
-                el = F.get(col, i)
-                within = F.size(col) > i
-                builders = _scalar_pred_builders(isub, el_dt, reg, base, stack,
-                                                 f"{spath}/items/{i}")
-                for kw, sp, fn in builders:
-                    pred = null_pass | ~within | F.coalesce(fn(el), F.lit(True))
-                    out.append(ColumnCheck(kw, f"{ipath}[{i}]", sp, pred,
-                                           _detail(el), colname))
-            addl = node.get("additionalItems", True)
-            if addl is False:
-                add("additionalItems", null_pass | (F.size(col) <= n_pos),
-                    leaf="additionalItems")
-            elif isinstance(addl, dict):
-                extras = F.slice(col, n_pos + 1,
-                                 F.greatest(F.size(col) - n_pos, F.lit(0)))
-                builders = _scalar_pred_builders(addl, el_dt, reg, base, stack,
-                                                 f"{spath}/additionalItems")
-                for kw, sp, fn in builders:
-                    pred = null_pass | _forall_ok(extras, fn)
-                    out.append(ColumnCheck(kw, ipath, sp, pred, _detail(col), colname))
-        elif items is None:
-            if "additionalItems" in node:
-                handled.add("additionalItems")  # inert without tuple items
-    else:
-        # array keywords are vacuous on non-array typed values — but a
-        # StringType column could hold a JSON array; compile_plan routes
-        # those to the dynamic path BEFORE calling us, so vacuous is safe
-        # only off strings.
-        if not isinstance(dt, T.StringType):
-            handled.update({"items", "additionalItems", "minItems",
-                            "maxItems", "uniqueItems"})
-
-    # ---- object keywords ----------------------------------------------------
-    if isinstance(dt, T.StructType):
-        handled |= {"required", "properties", "patternProperties",
-                    "additionalProperties", "minProperties", "maxProperties",
-                    "dependencies"}
-        out.extend(_compile_struct(col, node, dt, spath, ipath, colname,
-                                   reg, base, stack))
-    elif isinstance(dt, T.MapType):
-        handled |= {"required", "properties", "patternProperties",
-                    "additionalProperties", "minProperties", "maxProperties",
-                    "dependencies"}
-        out.extend(_compile_map(col, node, dt, spath, ipath, colname,
-                                reg, base, stack))
-    elif not isinstance(dt, T.StringType):
-        # scalar value can never be a JSON object → vacuous
-        handled |= {"required", "properties", "patternProperties",
-                    "additionalProperties", "minProperties", "maxProperties",
-                    "dependencies"}
-
-    # ---- combinators (any type) ---------------------------------------------
-    if "allOf" in node:
-        handled.add("allOf")
-        for i, b in enumerate(node["allOf"]):
-            out.extend(_compile_sub(col, b, dt, f"{spath}/allOf/{i}", ipath,
-                                    colname, reg, base, stack))
-    if "anyOf" in node:
-        handled.add("anyOf")
-        branches = [
-            _valid_pred(col, b, dt, f"{spath}/anyOf/{i}", ipath, colname, reg, base, stack)
-            for i, b in enumerate(node["anyOf"])
-        ]
-        add("anyOf", null_pass | _or_all([p for p, _ in branches]), leaf="anyOf",
-            tier=_joint_tier([t for _, t in branches]))
-    if "oneOf" in node:
-        handled.add("oneOf")
-        branches = [
-            _valid_pred(col, b, dt, f"{spath}/oneOf/{i}", ipath, colname, reg, base, stack)
-            for i, b in enumerate(node["oneOf"])
-        ]
-        hits = sum((p.cast("int") for p, _ in branches), F.lit(0))
-        add("oneOf", null_pass | (hits == 1), leaf="oneOf",
-            tier=_joint_tier([t for _, t in branches]))
-    if "not" in node:
-        handled.add("not")
-        p, tier = _valid_pred(col, node["not"], dt, f"{spath}/not", ipath,
-                              colname, reg, base, stack)
-        add("not", null_pass | ~p, leaf="not", tier=tier)
-
+    # array (object) keywords are vacuous on a typed value that is no
+    # array (object), but a StringType column could hold JSON:
+    # compile_plan routes those to the dynamic path before calling us
+    handled = _ANNOTATIONS | SCALAR_KEYWORDS | _COMBINATORS
+    if not isinstance(dt, T.StringType):
+        if not (json_null and isinstance(dt, T.ArrayType)):
+            handled |= _ARRAY_KEYWORDS
+        if not (json_null and isinstance(dt, (T.StructType, T.MapType))):
+            handled |= _OBJECT_KEYWORDS
     extra = set(node) - handled
     if extra:
         raise _NotNative(f"keywords {sorted(extra)} on {dt.simpleString()}")
+
+    out: list[ColumnCheck] = []
+    absent = cache(col.isNull)
+    detail = cache(lambda: _detail(col))
+
+    def add(keyword: str, ok: Column | bool, leaf: str | None = None,
+            tier: str = "native") -> None:
+        if ok is True:
+            return
+        pred = ok if json_null else _or(absent(), ok)
+        out.append(ColumnCheck(
+            keyword, ipath, f"{spath}/{leaf or keyword}",
+            F.lit(False) if pred is False else pred, detail(), colname, tier))
+
+    for kw, leaf, fail, tier in _scalar_keywords(node, _TypedValue(col, dt, json_null)):
+        if json_null and tier != "native":
+            raise _NotNative(f"{kw} on the {tier} tier cannot run in a lambda")
+        add(kw, _not(fail), leaf, tier)
+
+    if isinstance(dt, T.ArrayType) and not json_null:
+        el_dt = dt.elementType
+
+        def each_element(arr: Column, sub: Any, sp: str) -> list[ColumnCheck]:
+            """The checks of element schema ``sub``, each passing when no
+            element of ``arr`` fails it: one violation per array and
+            keyword, at the array path. pyspark gives every lambda a fresh
+            variable, so each check's ``forall`` compiles ``sub`` again
+            over its own; the first element names the checks."""
+            def checks_of(x: Column) -> list[ColumnCheck]:
+                return _compile_sub(x, sub, el_dt, sp, ipath, colname, reg,
+                                    base, stack, json_null=True)
+
+            return [replace(c, predicate=absent() | F.forall(arr, _nth_ok(checks_of, i)),
+                            detail=detail())
+                    for i, c in enumerate(checks_of(F.get(arr, 0)))]
+
+        if node.get("uniqueItems") is True:
+            add("uniqueItems", F.size(F.array_distinct(col)) == F.size(col))
+        items = node.get("items")
+        if isinstance(items, dict):
+            out.extend(each_element(col, items, f"{spath}/items"))
+        elif isinstance(items, list):
+            # per-index paths are static only on the tuple form
+            for i, isub in enumerate(items):
+                within = F.size(col) > i
+                for c in _compile_sub(F.get(col, i), isub, el_dt, f"{spath}/items/{i}",
+                                      f"{ipath}[{i}]", colname, reg, base, stack,
+                                      json_null=True):
+                    out.append(replace(c, predicate=absent() | ~within
+                                       | F.coalesce(c.predicate, F.lit(True))))
+            addl = node.get("additionalItems", True)
+            if addl is False:
+                add("additionalItems", F.size(col) <= len(items))
+            elif isinstance(addl, dict):
+                extras = F.slice(col, len(items) + 1,
+                                 F.greatest(F.size(col) - len(items), F.lit(0)))
+                out.extend(each_element(extras, addl, f"{spath}/additionalItems"))
+
+    if isinstance(dt, T.StructType) and not json_null:
+        out.extend(_compile_struct(col, node, dt, spath, ipath, colname,
+                                   reg, base, stack))
+    elif isinstance(dt, T.MapType) and not json_null:
+        out.extend(_compile_map(col, node, dt, spath, ipath, colname,
+                                reg, base, stack))
+
+    # ---- combinators (any type) ---------------------------------------------
+    for i, b in enumerate(node.get("allOf", ())):
+        out.extend(_compile_sub(col, b, dt, f"{spath}/allOf/{i}", ipath,
+                                colname, reg, base, stack, json_null))
+
+    def branch(b: Any, sp: str) -> tuple[Column, str]:
+        return _valid_pred(col, b, dt, sp, ipath, colname, reg, base, stack, json_null)
+
+    if "anyOf" in node:
+        bs = [branch(b, f"{spath}/anyOf/{i}") for i, b in enumerate(node["anyOf"])]
+        add("anyOf", _or_all([p for p, _ in bs]), tier=_joint_tier([t for _, t in bs]))
+    if "oneOf" in node:
+        bs = [branch(b, f"{spath}/oneOf/{i}") for i, b in enumerate(node["oneOf"])]
+        hits = sum((p.cast("int") for p, _ in bs), F.lit(0))
+        add("oneOf", hits == 1, tier=_joint_tier([t for _, t in bs]))
+    if "not" in node:
+        p, tier = branch(node["not"], f"{spath}/not")
+        add("not", ~p, tier=tier)
     return out
 
 
-def _forall_ok(arr: Column, fn: PredBuilder) -> Column:
-    """forall(arr, x -> coalesce(fn(x), true)) with a strictly
-    SINGLE-parameter lambda — pyspark binds a second lambda parameter to
-    the array index, so closures must capture fn, never default-arg it."""
-    def _ok(x: Column) -> Column:
-        return F.coalesce(fn(x), F.lit(True))
+def _nth_ok(checks_of: Callable[[Column], list[ColumnCheck]], i: int):
+    """``x -> check i of checks_of(x) passes``, a strictly SINGLE-parameter
+    lambda: pyspark binds a second lambda parameter to the array index."""
+    def ok(x: Column) -> Column:
+        return F.coalesce(checks_of(x)[i].predicate, F.lit(True))
 
-    return F.forall(arr, _ok)
+    return ok
 
 
 def _valid_pred(col, node, dt, spath, ipath, colname, reg, base,
-                stack) -> tuple[Column, str]:
+                stack, json_null=False) -> tuple[Column, str]:
     """'value satisfies node' as one Column (three-valued-safe): the
     conjunction of the compiled checks with NULL coerced to pass, and
     the joint tier of those checks."""
-    checks = _compile_sub(col, node, dt, spath, ipath, colname, reg, base, stack)
+    checks = _compile_sub(col, node, dt, spath, ipath, colname, reg, base,
+                          stack, json_null)
     return (_and_all([F.coalesce(c.predicate, F.lit(True)) for c in checks]),
             _joint_tier([c.tier for c in checks]))
 
@@ -964,6 +856,11 @@ def _compile_map(col, node, dt: T.MapType, spath, ipath, colname,
     absent = col.isNull()
     v_dt = dt.valueType
 
+    def value_ok(v: Column, sub: Any, sp: str) -> Column:
+        """A map value satisfies ``sub``, where NULL is JSON null."""
+        return _valid_pred(v, sub, v_dt, sp, ipath, colname, reg, base, stack,
+                           json_null=True)[0]
+
     for k in node.get("required", []) or []:
         out.append(ColumnCheck("required", f"{ipath}.{k}", f"{spath}/required",
                                absent | F.map_contains_key(col, F.lit(k)),
@@ -1000,17 +897,15 @@ def _compile_map(col, node, dt: T.MapType, spath, ipath, colname,
     elif isinstance(addl, dict):
         allowed_keys = sorted(declared)
         pat_list = [java_safe_pattern(rx) for rx in pat_specs]
-        vfn = _scalar_valid_builder(addl, v_dt, reg, base, stack,
-                                    f"{spath}/additionalProperties")
         ak, pl = allowed_keys, pat_list
 
         def _extra_ok(e):  # MUST stay single-parameter (pyspark HOF arity)
-            k, v = e.getField("key"), e.getField("value")
+            k = e.getField("key")
             known = member_of(k, ak)
             for rx in pl:
                 known = known | k.rlike(rx)
             return F.when(known, F.lit(True)).otherwise(
-                F.coalesce(vfn(v), F.lit(True)))
+                value_ok(e.getField("value"), addl, f"{spath}/additionalProperties"))
 
         out.append(ColumnCheck("additionalProperties", ipath,
                                f"{spath}/additionalProperties",
@@ -1020,32 +915,24 @@ def _compile_map(col, node, dt: T.MapType, spath, ipath, colname,
     # properties / patternProperties value checks (full scalar keyword set,
     # fail-closed: anything richer raises _NotNative → Arrow wrapper)
     for k, vsub in (node.get("properties", {}) or {}).items():
-        if not isinstance(vsub, dict) or not vsub:
-            continue
-        builders = _scalar_pred_builders(vsub, v_dt, reg, base, stack,
-                                         f"{spath}/properties/{k}")
-        val = F.element_at(col, F.lit(k))
         has_k = F.map_contains_key(col, F.lit(k))
-        for kw, sp, fn in builders:
-            out.append(ColumnCheck(
-                kw, f"{ipath}.{k}", sp,
-                absent | ~has_k | F.coalesce(fn(val), F.lit(True)),
-                F.substring(val.cast("string"), 1, 64), colname))
+        for c in _compile_sub(F.element_at(col, F.lit(k)), vsub, v_dt,
+                              f"{spath}/properties/{k}", f"{ipath}.{k}", colname,
+                              reg, base, stack, json_null=True):
+            out.append(replace(c, predicate=absent | ~has_k
+                               | F.coalesce(c.predicate, F.lit(True))))
     for rx, vsub in pat_specs.items():
         if not isinstance(vsub, dict) or not vsub:
             continue
-        vfn = _scalar_valid_builder(vsub, v_dt, reg, base, stack,
-                                    f"{spath}/patternProperties/{rx}")
-        jrx = java_safe_pattern(rx)
 
-        def _mk_entry_ok(jrx, vfn):
+        def _mk_entry_ok(jrx, vsub, sp):
             def entry_ok(e):  # single-parameter (pyspark HOF arity)
-                k, v = e.getField("key"), e.getField("value")
-                return F.when(k.rlike(jrx),
-                              F.coalesce(vfn(v), F.lit(True))).otherwise(F.lit(True))
+                return F.when(e.getField("key").rlike(jrx),
+                              value_ok(e.getField("value"), vsub, sp)).otherwise(F.lit(True))
             return entry_ok
 
-        entry_ok = _mk_entry_ok(jrx, vfn)
+        entry_ok = _mk_entry_ok(java_safe_pattern(rx), vsub,
+                                f"{spath}/patternProperties/{rx}")
         out.append(ColumnCheck(
             "patternProperties", ipath, f"{spath}/patternProperties/{rx}",
             absent | F.forall(F.map_entries(col), entry_ok),
@@ -1113,19 +1000,25 @@ def _string_is_dynamic(sub: Any, reg: SchemaRegistry, base: str,
 
 
 def _arrow_wrapper_spec(name: str, sub: Any, reg: SchemaRegistry,
-                        root_uri: str) -> ArrowColumnSpec:
+                        root_uri: str, spath: str) -> ArrowColumnSpec:
     """Complete fallback for a typed column whose subschema exceeds the
     native set: serialize the single value per row (``to_json(struct)``,
     still vectorized JVM-side) and run the compiled Python closure
-    validator on the Arrow path. The wrapper object schema reproduces the
-    table convention exactly: instance paths ``$.{name}…``, schema paths
-    ``{root}#/properties/{name}/…``; a NULL column serializes to ``{}``
-    (ignoreNullFields), i.e. ABSENT, preserving the typed null contract."""
-    wrapper = {"type": "object", "properties": {name: sub}}
-    validator = compile_python_validator(wrapper, registry=reg, base_uri=root_uri)
+    validator on the Arrow path, with the column's own schema path
+    ``spath`` (a column reached through patternProperties or
+    additionalProperties reports it, as pyvalidator over the row does).
+    A NULL column serializes to ``{}`` (ignoreNullFields), i.e. ABSENT,
+    preserving the typed null contract."""
+    inner = compile_python_validator(sub, registry=reg, base_uri=root_uri,
+                                     schema_path=spath)
+
+    def check(doc: dict, ipath: str, out: list) -> None:
+        if name in doc:
+            out.extend(inner.validate(doc[name], ipath))
+
     payload = F.to_json(F.struct(F.col(name).alias(name)))
-    return ArrowColumnSpec(column=name, validator=validator,
-                           instance_prefix="$", payload=payload)
+    return ArrowColumnSpec(column=name, validator=PyValidator(check, sub, inner.root_uri),
+                           instance_prefix=join_path("$", name), payload=payload)
 
 
 # ---------------------------------------------------------------------------
@@ -1406,7 +1299,7 @@ def _compile_column(name: str, sub: Any, is_required: bool, spath_base: str,
         vn = (
             try_compile_variant_native(
                 name, sub, registry, root_uri, unroll,
-                parsed=F.col(valias),
+                parsed=F.col(valias), schema_path=spath,
             )
             if unroll > 0
             else None
@@ -1414,19 +1307,13 @@ def _compile_column(name: str, sub: Any, is_required: bool, spath_base: str,
         if vn is not None:
             plan.variant_sources[valias] = name
             plan.variant_arrays.append(vn.violations_array)
-            if vn.deep_guard is not None:
-                sub_validator = compile_python_validator(
-                    sub, registry=registry, base_uri=root_uri
-                )
-                plan.arrow_specs.append(
-                    ArrowColumnSpec(name, sub_validator, f"$.{name}",
-                                    gate=vn.deep_guard)
-                )
-        else:
-            sub_validator = compile_python_validator(
-                sub, registry=registry, base_uri=root_uri
-            )
-            plan.arrow_specs.append(ArrowColumnSpec(name, sub_validator, f"$.{name}"))
+        if vn is None or vn.deep_guard is not None:
+            # the whole column, or the rows past the unroll (gated)
+            validator = compile_python_validator(
+                sub, registry=registry, base_uri=root_uri, schema_path=spath)
+            plan.arrow_specs.append(ArrowColumnSpec(
+                name, validator, f"$.{name}",
+                gate=None if vn is None else vn.deep_guard))
         return
 
     # typed column: try the complete native compile; on _NotNative fall
@@ -1437,4 +1324,4 @@ def _compile_column(name: str, sub: Any, is_required: bool, spath_base: str,
                          registry, root_uri)
         )
     except _NotNative:
-        plan.arrow_specs.append(_arrow_wrapper_spec(name, sub, registry, root_uri))
+        plan.arrow_specs.append(_arrow_wrapper_spec(name, sub, registry, root_uri, spath))

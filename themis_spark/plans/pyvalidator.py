@@ -185,11 +185,14 @@ def compile_python_validator(
     formats: dict[str, Callable[[str], bool]] | None = None,
     validate_formats: bool = True,
     base_uri: str | None = None,
+    schema_path: str | None = None,
 ) -> PyValidator:
     """Compile ``schema`` to a validator. When ``base_uri`` is given the
     schema is treated as a subschema of an already-registered document and
     its $refs resolve in that document's scope (used by the table compiler
-    to spin off Arrow validators for nested JSON columns)."""
+    to spin off Arrow validators for nested JSON columns). ``schema_path``
+    is where ``schema`` sits in that document (default: its root,
+    ``{root_uri}#``); violation schema paths extend it."""
     if base_uri is not None:
         if registry is None:
             raise ValueError("base_uri requires a registry")
@@ -558,7 +561,7 @@ def compile_python_validator(
         except Exception:
             return ref
 
-    root_fn = compile_node(schema, f"{root_uri}#", root_uri)
+    root_fn = compile_node(schema, schema_path or f"{root_uri}#", root_uri)
     return PyValidator(root_fn, schema, root_uri)
 
 
